@@ -1,20 +1,13 @@
 """Checkpoint-grade filesystem access for streaming state stores.
 
-Two halves, matching where the code runs:
-
-- :class:`HadoopFS` — a thin driver-side wrapper over the JVM
-  ``org.apache.hadoop.fs.FileSystem`` (the same API Spark's own
-  checkpointing uses), so state stores written "next to the checkpoint
-  dir" actually work when that dir is ``hdfs://`` or ``s3a://`` and not
-  just a local mount. Plain local paths resolve through
-  ``fs.defaultFS`` (``file:///`` in local mode), so nothing changes for
-  tests and single-node runs.
-
-- :func:`atomic_publish_file` — an EXECUTOR-safe single-file publish
-  (no SparkSession required): local paths use ``os.replace`` (atomic on
-  POSIX); URI paths go through ``pyarrow.fs`` when the scheme is
-  supported there. Used by the hot-key marker registry, which is
-  written from inside a pandas UDF where no JVM gateway exists.
+:class:`HadoopFS` is a thin driver-side wrapper over the JVM
+``org.apache.hadoop.fs.FileSystem`` (the same API Spark's own
+checkpointing uses), so state stores written "next to the checkpoint
+dir" actually work when that dir is ``hdfs://`` or ``s3a://`` and not
+just a local mount. Plain local paths resolve through ``fs.defaultFS``
+(``file:///`` in local mode), so nothing changes for tests and
+single-node runs. :class:`EpochLog` and :func:`publish_parquet_dir` build
+the epoch-commit protocol of the incremental stores on top of it.
 
 Atomicity note (the honest 100 TB caveat): directory rename is atomic
 on HDFS and POSIX, which is what the epoch-commit protocol relies on.
@@ -25,8 +18,6 @@ consistent layer), exactly as they must for Spark checkpoints.
 """
 
 from __future__ import annotations
-
-import os
 
 
 class HadoopFS:
@@ -103,83 +94,6 @@ class HadoopFS:
 
     def delete(self, path: str, recursive: bool = True) -> None:
         self._fs.delete(self._p(path), recursive)
-
-
-def atomic_publish_file(path: str, data: bytes) -> bool:
-    """Executor-safe idempotent publish of one small file at ``path``.
-
-    Local paths (no ``://``): write a temp sibling then ``os.replace``
-    (atomic). URI paths: ``pyarrow.fs`` — object stores get a direct
-    write (a single-object PUT is atomic at object granularity, which is
-    all an idempotent marker needs); filesystems with rename get
-    temp+move. Returns False when the scheme isn't reachable from this
-    worker (caller degrades gracefully — a missed marker only delays
-    salting by a batch, never breaks correctness).
-    """
-    if "://" not in path:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp{os.getpid()}"
-        with open(tmp, "wb") as f:
-            f.write(data)
-        os.replace(tmp, path)
-        return True
-    try:
-        from pyarrow import fs as pafs
-
-        filesystem, rel = pafs.FileSystem.from_uri(path)
-        if isinstance(filesystem, pafs.LocalFileSystem):
-            tmp = f"{rel}.tmp{os.getpid()}"
-            with filesystem.open_output_stream(tmp) as f:
-                f.write(data)
-            filesystem.move(tmp, rel)
-        else:
-            # object store / HDFS: single-file create; markers are
-            # idempotent JSON blobs, so a concurrent double-write of the
-            # same content is harmless
-            with filesystem.open_output_stream(rel) as f:
-                f.write(data)
-        return True
-    except Exception:  # noqa: BLE001 - marker publish is best-effort
-        return False
-
-
-def executor_read_small_files(dir_path: str, suffix: str = ".json") -> list[bytes]:
-    """Executor-safe listing+read of every small file under ``dir_path``
-    ending in ``suffix`` (no SparkSession required — the worker-side twin
-    of HadoopFS.list_names/read_bytes). Local paths use os.listdir; URI
-    paths go through pyarrow.fs. A missing/unreachable directory returns
-    [] (callers treat the registry as empty and degrade gracefully)."""
-    out: list[bytes] = []
-    if "://" not in dir_path:
-        try:
-            names = os.listdir(dir_path)
-        except OSError:
-            return out
-        for n in sorted(names):
-            if not n.endswith(suffix):
-                continue
-            try:
-                with open(os.path.join(dir_path, n), "rb") as f:
-                    out.append(f.read())
-            except OSError:
-                continue
-        return out
-    try:
-        from pyarrow import fs as pafs
-
-        filesystem, rel = pafs.FileSystem.from_uri(dir_path)
-        sel = pafs.FileSelector(rel, allow_not_found=True)
-        for info in sorted(filesystem.get_file_info(sel), key=lambda i: i.path):
-            if info.type != pafs.FileType.File or not info.path.endswith(suffix):
-                continue
-            try:
-                with filesystem.open_input_stream(info.path) as f:
-                    out.append(f.read())
-            except OSError:
-                continue
-    except Exception:  # noqa: BLE001 - unreachable scheme → empty registry
-        return []
-    return out
 
 
 class EpochLog:

@@ -170,10 +170,7 @@ class SqlApp:
         self,
         spark: SparkSession,
         allow_unbounded_groups: bool = False,
-        nfa_salt: int | str | None = None,
-        nfa_hot_key_dir: str | None = None,
-        nfa_auto_salt_r: int = 8,
-        nfa_hot_threshold: int | None = None,
+        nfa_salt: int | None = None,
         trigger_horizon: tuple | None = None,
         streaming_triggers: bool = False,
     ):
@@ -193,15 +190,11 @@ class SqlApp:
         #: unbounded cross join (every A pairs with every B, state can never
         #: be evicted in streaming) — refused unless explicitly opted in
         self.allow_unbounded_groups = allow_unbounded_groups
-        #: hot-key salting defaults for live-stream PATTERN queries:
-        #: nfa_salt=R (static) or "auto" (detector-driven re-key; needs
-        #: nfa_hot_key_dir on shared storage — see streaming.nfa). Applied
-        #: to EVERY-mode chains only: fire-once is per-key state that
-        #: sub-keys cannot share, so those queries compile unsalted.
+        #: hot-key salting for live-stream PATTERN queries: nfa_salt=R
+        #: splits each key into R sub-keys (streaming.nfa.chain_stream).
+        #: Applied to EVERY-mode chains only: fire-once is per-key state
+        #: that sub-keys cannot share, so those queries compile unsalted.
         self.nfa_salt = nfa_salt
-        self.nfa_hot_key_dir = nfa_hot_key_dir
-        self.nfa_auto_salt_r = nfa_auto_salt_r
-        self.nfa_hot_threshold = nfa_hot_threshold
 
     # ------------------------------------------------------------------
     def register_stream(
@@ -1481,9 +1474,6 @@ class SqlApp:
             # app-level hot-key salting default (EVERY only: fire-once is
             # per-key state sub-keys cannot share)
             salt=self.nfa_salt if src.every else None,
-            hot_key_dir=self.nfa_hot_key_dir,
-            auto_salt_r=self.nfa_auto_salt_r,
-            hot_threshold=self.nfa_hot_threshold,
         )
 
     # ------------------------------------------------------------------

@@ -329,7 +329,6 @@ def parse_app(text: str) -> list:
     """Parse a full application (list of CreateStream / Query / Partition)."""
     text = re.sub(r"--[^\n]*", "", text)  # line comments
     out = []
-    i = 0
     stmts = split_top_level(text, ";")
     idx = 0
     while idx < len(stmts):
@@ -351,17 +350,17 @@ def parse_app(text: str) -> list:
         elif up.startswith("CREATE STREAM") or up.startswith("CREATE TABLE"):
             out.append(_parse_create(stmt))
         elif up.startswith("PARTITION WITH") or up.startswith("PARTITION BY"):
-            # re-assemble the BEGIN … END block (it contained ';')
-            block = stmt
-            while "END" not in block.upper().split() and idx < len(stmts):
-                block += ";" + stmts[idx]
+            # re-assemble the BEGIN … END block (it contained ';'): it
+            # closes at the first statement whose last token is END
+            block = [stmt]
+            while not re.search(r"\bEND$", block[-1], re.I) and idx < len(stmts):
+                block.append(stmts[idx])
                 idx += 1
-            out.append(_parse_partition(block))
+            out.append(_parse_partition(";".join(block)))
         elif up.startswith("INSERT INTO") or up.startswith("SELECT"):
             out.append(parse_query(stmt))
         else:
             raise ValueError(f"unsupported statement: {stmt[:60]!r}")
-    del i
     return out
 
 

@@ -5,10 +5,10 @@ state machine; here ~200 lines over Spark's state store).
 
 Design:
 - match predicates are evaluated as Catalyst expressions *before* the
-  stateful operator (``_is_a``/``_is_b`` boolean columns) — the Python NFA
-  only sequences; filtering stays JVM-side and pushes to the scan;
-- state per key is flat arrays (open-start timestamps + payloads), so the
-  state store serializes compactly;
+  stateful operator (``_is_*`` boolean columns) — the Python NFA only
+  sequences; filtering stays JVM-side and pushes to the scan;
+- state per key is a few arrays (timestamps plus JSON-encoded partial
+  matches or payloads), so the state store serializes compactly;
 - within-batch ordering: events are sorted by event time inside each
   micro-batch (the reference's junction guarantees arrival order;
   micro-batching makes this explicit — SURVEY §7 hard spot (a));
@@ -18,6 +18,16 @@ Design:
 Scale: state is per key-group in the state store (RocksDB on a real
 cluster), partitioned by the grouping key — the same shuffle a streaming
 aggregation pays. No global state, no driver involvement.
+
+One kernel per semantics — these are the kernels ``SqlApp`` compiles a
+live-stream PATTERN to:
+
+- ``chain_stream``: every followed-by shape (1..N steps, mid-chain AND/OR
+  groups and count quantifiers, a trailing ``NOT C FOR d``);
+- ``count_quantifier_stream``: a lone ``A{m,n}``; it fires per event on a
+  trailing ``[m, n]`` count, and ``chain_stream`` rejects a quantified step 0;
+- ``logical_and_stream_payload``: a first-step ``A AND B``; ``chain_stream``
+  rejects a grouped step 0.
 """
 
 from __future__ import annotations
@@ -64,491 +74,24 @@ def _bool_arr(s: pd.Series) -> np.ndarray:
     return s.fillna(False).to_numpy(dtype=bool)
 
 
-#: Per-key per-micro-batch event count above which the stateful NFA logs an
-#: executor-side hot-key warning (the per-key rate ceiling is documented in
-#: PERF.md; the fix is the ``salt`` parameter below or the relational path).
+#: Per-key per-micro-batch event count above which the unsalted chain NFA
+#: logs an executor-side hot-key warning (the per-key rate ceiling is
+#: documented in PERF.md; the fix is ``salt=R`` or the relational path).
 HOT_KEY_WARN_EVENTS = 200_000
 
 
-def _warn_hot_key(key, n: int, salted: bool, threshold: int | None = None) -> None:
-    if salted or n <= (threshold or HOT_KEY_WARN_EVENTS):
+def _warn_hot_key(key, n: int) -> None:
+    if n <= HOT_KEY_WARN_EVENTS:
         return
     import warnings
 
     warnings.warn(
         f"streaming NFA hot key {key!r}: {n} events in one micro-batch "
-        f"(> {threshold or HOT_KEY_WARN_EVENTS}) funnel through a single "
-        "python worker (~70-90k events/s/key ceiling, see PERF.md). Pass "
-        "salt=R or salt='auto' to followed_by_stream (exact semantics "
+        f"(> {HOT_KEY_WARN_EVENTS}) funnel through a single python worker "
+        "(~70-90k events/s/key ceiling, see PERF.md). Set "
+        "SqlApp(nfa_salt=R) or pass chain_stream(salt=R) (exact semantics "
         "preserved) or route this key to the relational batch path.",
         stacklevel=2,
-    )
-
-
-def _mark_hot_key(hot_dir: str, key_str: str) -> None:
-    """Executor-side: persist a hot-key marker (idempotent, atomic
-    single-file publish) so the NEXT plan build salts this key.
-    ``hot_dir`` must be a path visible to both executors and driver —
-    on a cluster, shared storage next to the checkpoint dir (same
-    durability requirement). Scheme-aware: local paths use os.replace,
-    ``hdfs://``/``s3a://`` go through pyarrow.fs (fsio.atomic_publish_file)
-    — a marker is best-effort; a missed publish only delays salting by a
-    batch, never breaks match correctness."""
-    import hashlib
-    import json as _json
-    import os
-
-    from engine_spark.fsio import atomic_publish_file
-
-    fn = (
-        hot_dir.rstrip("/")
-        + "/"
-        + hashlib.md5(key_str.encode()).hexdigest()
-        + ".json"
-    )
-    if "://" not in fn and os.path.exists(fn):
-        return
-    atomic_publish_file(fn, (_json.dumps({"k": key_str}) + "\n").encode())
-
-
-#: executor-side hot-key registry reload cadence for ``salt='auto-live'``
-#: (seconds). A marker written in batch N is visible to every executor
-#: within this TTL — set it at or below the trigger interval so batch
-#: N+1 re-keys. Tests set 0 to force a reload per Arrow batch.
-HOT_RELOAD_TTL_S = 2.0
-
-#: per-process registry snapshot cache: dir → (monotonic_read_time, keys)
-_HOT_LIVE_CACHE: dict[str, tuple[float, frozenset]] = {}
-
-
-def _hot_keys_live(hot_dir: str, ttl: float) -> frozenset:
-    """Executor-side marker-set read with a TTL cache (the worker twin of
-    the driver's eager plan-build listing): one small-dir listing per
-    process per TTL window, never per row."""
-    import json as _json
-    import time as _time
-
-    now = _time.monotonic()
-    ent = _HOT_LIVE_CACHE.get(hot_dir)
-    if ent is not None and now - ent[0] < ttl:
-        return ent[1]
-    from engine_spark.fsio import executor_read_small_files
-
-    keys: set[str] = set()
-    for data in executor_read_small_files(hot_dir, ".json"):
-        try:
-            for line in data.decode().splitlines():
-                if line.strip():
-                    keys.add(str(_json.loads(line)["k"]))
-        except Exception:  # noqa: BLE001 - torn marker delays, not breaks
-            continue
-    snap = frozenset(keys)
-    _HOT_LIVE_CACHE[hot_dir] = (now, snap)
-    return snap
-
-
-def _auto_salt(
-    tagged: DataFrame,
-    ts_col: str,
-    key_col: str,
-    hash_cols: list[str],
-    hot_key_dir: str,
-    r: int,
-    repl_cond: Column | None = None,
-    anchor_col: str = "_is_a",
-    live: bool = False,
-) -> DataFrame:
-    """Hot-key-only salting, driven by the marker registry: keys listed in
-    ``hot_key_dir`` get the exact A-owns-one/B-fans-to-all-R treatment
-    (same contract as ``_salt_a_b``); cold keys ride in sub-key 0 with no
-    replication cost.
-
-    The registry is read EAGERLY on the driver at plan-build time (one
-    Hadoop-FS listing + tiny reads — no file-source relation whose
-    InMemoryFileIndex would freeze the listing inside a long-lived
-    query), so the snapshot semantics are explicit: a marker written by
-    the detector in batch N re-keys the NEXT PLAN BUILD. Under
-    :class:`StreamRunner` (which rebuilds the plan every micro-batch,
-    the supported deployment for ``salt='auto'``) that is batch N+1; a
-    single long-lived ``writeStream.start()`` picks markers up at query
-    restart — see SCALE.md "auto-salt freshness".
-
-    Membership is sticky, which keeps the cold→hot transition exact:
-    pre-salt state lives in sub-key 0 and B events replicate to ALL
-    sub-keys including 0, so existing opens still meet every B; a
-    hot→cold flip would strand state in sub-keys 1..R-1, which is why
-    markers are never removed.
-
-    ``live=True`` (``salt='auto-live'``): instead of freezing the
-    registry into an ``isin`` literal at plan build, the ``_hot`` flag
-    comes from an Arrow-batched pandas UDF whose per-process marker
-    snapshot refreshes on :data:`HOT_RELOAD_TTL_S` — so a marker written
-    in batch N re-keys batch N+1 under a SINGLE long-lived
-    ``writeStream.start()``, no restart and no StreamRunner re-plan.
-    Cost: one vectorized set-membership pass over the key column per
-    batch (cold keys included), vs zero Python for the frozen literal —
-    which is why the snapshot mode stays the default."""
-    import json as _json
-
-    from engine_spark.fsio import HadoopFS
-
-    spark = tagged.sparkSession
-    fs = HadoopFS(spark, hot_key_dir)
-    fs.mkdirs(hot_key_dir)
-    if live:
-        ttl = HOT_RELOAD_TTL_S
-
-        @F.pandas_udf("boolean")
-        def _hot_live(k: pd.Series) -> pd.Series:
-            keys = _hot_keys_live(hot_key_dir, ttl)
-            if not keys:
-                return pd.Series(False, index=k.index)
-            return k.isin(list(keys))
-
-        tagged = tagged.withColumn(
-            "_hot", _hot_live(F.col(key_col).cast("string"))
-        )
-    else:
-        base = hot_key_dir.rstrip("/")
-        keys: set[str] = set()
-        for name, is_dir in fs.list_names(hot_key_dir):
-            if is_dir or not name.endswith(".json"):
-                continue
-            try:
-                for line in fs.read_bytes(f"{base}/{name}").decode().splitlines():
-                    if line.strip():
-                        keys.add(str(_json.loads(line)["k"]))
-            except Exception:  # noqa: BLE001 - torn marker delays, not breaks
-                continue
-        if keys:
-            tagged = tagged.withColumn(
-                "_hot",
-                F.when(
-                    F.col(key_col).cast("string").isin(*sorted(keys)),
-                    F.lit(True),
-                ),
-            )
-        else:
-            tagged = tagged.withColumn("_hot", F.lit(None).cast("boolean"))
-    if repl_cond is None:
-        repl_cond = F.col("_is_b")
-    own = F.when(
-        F.col("_hot"),
-        F.pmod(F.xxhash64(*[F.col(c) for c in [ts_col, *hash_cols]]), F.lit(r)),
-    ).otherwise(F.lit(0).cast("long"))
-    return (
-        tagged.withColumn(
-            "_salt",
-            F.explode(
-                F.when(
-                    F.col("_hot") & repl_cond,
-                    F.sequence(F.lit(0).cast("long"), F.lit(r - 1).cast("long")),
-                ).otherwise(F.array(own))
-            ),
-        )
-        .withColumn(anchor_col, F.col(anchor_col) & (F.col("_salt") == own))
-        .drop("_hot")
-    )
-
-
-def followed_by_stream(
-    df: DataFrame,
-    ts_col: str,
-    key_col: str,
-    first: Column,
-    second: Column,
-    within_seconds: int,
-    value_col: str,
-    late: str = "0 seconds",
-    salt: int | str | None = None,
-    hot_key_dir: str | None = None,
-    auto_salt_r: int = 8,
-    hot_threshold: int | None = None,
-) -> DataFrame:
-    """Streaming `e1=A -> e2=B WITHIN d` per key (EVERY semantics: every A
-    opens a state; each A takes its earliest B — first-match, PATTERN mode).
-
-    Output: (key, e1_ts, e1_value, e2_ts, e2_value, delay_seconds).
-
-    ``salt=R`` breaks the single-hot-key ceiling EXACTLY: all events of one
-    key otherwise funnel through one python worker (~70-90k events/s/key,
-    PERF.md). Each A event hashes to ONE of R sub-keys while every B event
-    is replicated to ALL R — so every sub-key still sees the full B stream
-    in order and each A meets its true earliest B. Matches are emitted once
-    (an A lives in exactly one sub-key): the union of sub-key outputs IS the
-    unsalted output, no merge step. Cost: B-volume ×R — right when the
-    A-side dominates (probe-heavy patterns); for B-heavy streams prefer the
-    relational path. State stays bounded per sub-key (same eviction +
-    event-time timeout). A per-batch detector also warns (executor log)
-    when an unsalted key exceeds HOT_KEY_WARN_EVENTS in one micro-batch.
-
-    ``salt="auto"`` wires the detector to the fix: pass ``hot_key_dir`` (a
-    path visible to executors AND driver — put it next to the checkpoint
-    dir, which has the same shared-storage requirement). When a key's
-    per-micro-batch volume crosses ``hot_threshold`` (default
-    HOT_KEY_WARN_EVENTS) the detector persists a marker; the registry is
-    snapshotted at each PLAN BUILD, so under StreamRunner (which rebuilds
-    the plan per micro-batch — the supported deployment for auto mode)
-    the NEXT batch re-keys that key across ``auto_salt_r`` sub-keys with
-    the same exactness contract as static salt. ``salt="auto-live"`` is
-    the variant for a SINGLE long-lived ``start()``: membership is
-    re-read executor-side on a TTL (HOT_RELOAD_TTL_S), so a marker from
-    batch N re-keys batch N+1 with no restart and no re-plan, at the
-    cost of one Arrow-batched membership pass per batch. Membership is
-    sticky (see _auto_salt for why that is required for exactness).
-    Cold keys pay only a literal IN-set membership test — no replication.
-    """
-    within_us = within_seconds * US
-    tagged = watermarked(df, ts_col, late).withColumn(
-        "_is_a", first.cast("boolean")
-    ).withColumn("_is_b", second.cast("boolean"))
-    auto = salt in ("auto", "auto-live")
-    if auto:
-        if not hot_key_dir:
-            raise ValueError("salt='auto' requires hot_key_dir")
-        if auto_salt_r < 2:
-            raise ValueError("auto_salt_r must be >= 2")
-        tagged = _auto_salt(
-            tagged, ts_col, key_col, [value_col], hot_key_dir, auto_salt_r,
-            live=salt == "auto-live",
-        )
-    elif salt is not None:
-        if salt < 1:
-            raise ValueError("salt must be >= 1")
-        # A rows own one deterministic sub-key; B rows fan out to all R.
-        # A row that is BOTH A and B keeps its A role only in its own
-        # sub-key (otherwise R copies would each open a start).
-        own = F.pmod(F.xxhash64(F.col(ts_col), F.col(value_col)), F.lit(salt))
-        tagged = (
-            tagged.withColumn(
-                "_salt",
-                F.explode(
-                    F.when(
-                        F.col("_is_b"),
-                        F.sequence(F.lit(0).cast("long"), F.lit(salt - 1).cast("long")),
-                    ).otherwise(F.array(own))
-                ),
-            )
-            .withColumn("_is_a", F.col("_is_a") & (F.col("_salt") == own))
-        )
-
-    tstype = df.schema[ts_col].dataType.simpleString()
-    out_schema = (
-        f"{key_col} string, e1_ts {tstype}, e1_value double, "
-        f"e2_ts {tstype}, e2_value double, delay_seconds double"
-    )
-    state_schema = "starts_ts array<long>, starts_val array<double>"
-    salted = salt is not None
-    _threshold = hot_threshold
-
-    def run(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        starts: list[tuple[int, float]] = []
-        if state.exists:
-            sts, svs = state.get
-            starts = list(zip(sts or [], svs or []))
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if auto:
-            # sub-key 0 carries a cold key's whole stream; crossing the
-            # threshold there marks the key so the NEXT batch salts it
-            if key[1] == 0 and len(rows) > (_threshold or HOT_KEY_WARN_EVENTS):
-                _mark_hot_key(hot_key_dir, str(key[0]))
-        else:
-            _warn_hot_key(key[0], len(rows), salted, _threshold)
-        rows = rows.sort_values(ts_col, kind="mergesort")
-        # vectorized row access: one cast per column instead of a dict +
-        # pd.Timestamp per event; only A/B rows enter the automaton (other
-        # events cannot change state — eviction re-checks at batch end)
-        ts_us = _ts_us_arr(rows[ts_col])
-        is_a = _bool_arr(rows["_is_a"])
-        is_b = _bool_arr(rows["_is_b"])
-        vals = rows[value_col].to_numpy(dtype="float64", na_value=float("nan"))
-        out = []
-        for j in np.flatnonzero(is_a | is_b):
-            t = int(ts_us[j])
-            if is_b[j]:
-                kept = []
-                for ta, va in starts:
-                    if t > ta and t - ta <= within_us:
-                        out.append(
-                            (
-                                key[0],
-                                pd.Timestamp(ta * 1000),
-                                va,
-                                pd.Timestamp(t * 1000),
-                                float(vals[j]),
-                                (t - ta) / US,
-                            )
-                        )
-                    elif t - ta <= within_us:
-                        kept.append((ta, va))  # B not after A: keep open
-                    # else: expired start, drop
-                starts = kept
-            if is_a[j]:
-                starts.append((t, float(vals[j])))
-        # evict expired opens relative to the newest event seen
-        if len(rows):
-            now = int(ts_us[-1])
-            starts = [(ta, va) for ta, va in starts if now - ta <= within_us]
-        if starts:
-            state.update(([t for t, _ in starts], [v for _, v in starts]))
-            # timeout once every open start is past its deadline
-            _set_timeout(state, max(t for t, _ in starts) // 1000 + within_seconds * 1000)
-        else:
-            state.remove()
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    key_col, "e1_ts", "e1_value", "e2_ts", "e2_value", "delay_seconds",
-                ],
-            )
-
-    group_cols = [key_col, "_salt"] if salted else [key_col]
-    return tagged.groupBy(*group_cols).applyInPandasWithState(
-        run, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-    )
-
-
-def _salt_a_b(tagged: DataFrame, ts_col: str, hash_cols: list[str], salt: int):
-    """Shared hot-key salting for A→B-shaped stateful operators: the
-    stateful role (A: opens state) hashes to ONE of ``salt`` sub-keys; the
-    reactive role (B: closes/cancels state) replicates to ALL — every
-    sub-key sees the full B stream, so per-A outcomes are EXACT and the
-    sub-key union is the unsalted output. An event in both roles keeps its
-    A role only in its own sub-key. Returns the salted frame (adds
-    ``_salt``, rewrites ``_is_a``)."""
-    if salt < 1:
-        raise ValueError("salt must be >= 1")
-    own = F.pmod(F.xxhash64(*[F.col(c) for c in [ts_col, *hash_cols]]), F.lit(salt))
-    return (
-        tagged.withColumn(
-            "_salt",
-            F.explode(
-                F.when(
-                    F.col("_is_b"),
-                    F.sequence(F.lit(0).cast("long"), F.lit(salt - 1).cast("long")),
-                ).otherwise(F.array(own))
-            ),
-        )
-        .withColumn("_is_a", F.col("_is_a") & (F.col("_salt") == own))
-    )
-
-
-def absent_stream(
-    df: DataFrame,
-    ts_col: str,
-    key_col: str,
-    first: Column,
-    absent: Column,
-    within_seconds: int,
-    value_col: str,
-    late: str = "0 seconds",
-    salt: int | str | None = None,
-    hot_key_dir: str | None = None,
-    auto_salt_r: int = 8,
-    hot_threshold: int | None = None,
-) -> DataFrame:
-    """Streaming `e1=A NOT B FOR d`: emit A once d elapses with no B on the
-    key (reference absent_stream_state_element.rs + timer_wheel.rs — the
-    timer wheel becomes an event-time state timeout).
-
-    Emission is driven by the watermark: an A is emitted when the watermark
-    passes ``A.ts + d`` with no cancelling B seen.
-
-    ``salt=R``: exact hot-key parallelization — A events hash to one of R
-    sub-keys, cancelling B events replicate to all R (see _salt_a_b; same
-    contract as followed_by_stream: per-sub-key outcomes are exact, the
-    union is the unsalted output). ``salt="auto"`` + ``hot_key_dir``: the
-    detector-driven variant — see followed_by_stream.
-    """
-    within_us = within_seconds * US
-    tagged = watermarked(df, ts_col, late).withColumn(
-        "_is_a", first.cast("boolean")
-    ).withColumn("_is_b", absent.cast("boolean"))
-    auto = salt in ("auto", "auto-live")
-    if auto:
-        if not hot_key_dir:
-            raise ValueError("salt='auto' requires hot_key_dir")
-        tagged = _auto_salt(
-            tagged, ts_col, key_col, [value_col], hot_key_dir, auto_salt_r,
-            live=salt == "auto-live",
-        )
-    elif salt is not None:
-        tagged = _salt_a_b(tagged, ts_col, [value_col], salt)
-
-    tstype = df.schema[ts_col].dataType.simpleString()
-    out_schema = f"{key_col} string, e1_ts {tstype}, e1_value double"
-    state_schema = "starts_ts array<long>, starts_val array<double>"
-
-    def run(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        starts: list[tuple[int, float]] = []
-        if state.exists:
-            sts, svs = state.get
-            starts = list(zip(sts or [], svs or []))
-        if state.hasTimedOut:
-            # watermark passed the earliest deadline: emit all survivors
-            # whose window fully elapsed (watermark ≥ ts + d)
-            wm_ms = state.getCurrentWatermarkMs()
-            ready = [(t, v) for t, v in starts if wm_ms * 1000 >= t + within_us]
-            starts = [(t, v) for t, v in starts if wm_ms * 1000 < t + within_us]
-            if starts:
-                state.update(([t for t, _ in starts], [v for _, v in starts]))
-                _set_timeout(state, min(t for t, _ in starts) // 1000 + within_seconds * 1000)
-            else:
-                state.remove()
-            if ready:
-                yield pd.DataFrame(
-                    [(key[0], pd.Timestamp(t * 1000), v) for t, v in ready],
-                    columns=[key_col, "e1_ts", "e1_value"],
-                )
-            return
-        rows = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            ts_col, kind="mergesort"
-        )
-        if auto and key[1] == 0 and len(rows) > (
-            hot_threshold or HOT_KEY_WARN_EVENTS
-        ):
-            _mark_hot_key(hot_key_dir, str(key[0]))
-        ts_us = _ts_us_arr(rows[ts_col])
-        is_a = _bool_arr(rows["_is_a"])
-        is_b = _bool_arr(rows["_is_b"])
-        vals = rows[value_col].to_numpy(dtype="float64", na_value=float("nan"))
-        for j in np.flatnonzero(is_a | is_b):
-            t = int(ts_us[j])
-            if is_b[j]:
-                # cancel every open A the B falls within
-                starts = [
-                    (ta, va) for ta, va in starts if not (t > ta and t - ta <= within_us)
-                ]
-            if is_a[j]:
-                starts.append((t, float(vals[j])))
-        # Flush matured As on the DATA path too: Spark never sets hasTimedOut
-        # for a key that receives data every micro-batch, so a busy key would
-        # otherwise defer its "A with no B within d" emissions indefinitely
-        # (the reference's timer wheel fires at the deadline regardless of
-        # traffic). Any open A whose deadline the watermark has passed was
-        # not cancelled by the rows above — emit it now.
-        wm_ms = state.getCurrentWatermarkMs()
-        ready = [(t, v) for t, v in starts if wm_ms * 1000 >= t + within_us]
-        starts = [(t, v) for t, v in starts if wm_ms * 1000 < t + within_us]
-        if starts:
-            state.update(([t for t, _ in starts], [v for _, v in starts]))
-            _set_timeout(state, min(t for t, _ in starts) // 1000 + within_seconds * 1000)
-        else:
-            state.remove()
-        if ready:
-            yield pd.DataFrame(
-                [(key[0], pd.Timestamp(t * 1000), v) for t, v in ready],
-                columns=[key_col, "e1_ts", "e1_value"],
-            )
-        return
-
-    group_cols = [key_col, "_salt"] if salt is not None else [key_col]
-    return tagged.groupBy(*group_cols).applyInPandasWithState(
-        run, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
     )
 
 
@@ -565,15 +108,12 @@ def chain_stream(
     absent_final: tuple[Column, float] | None = None,
     step_mins: list[int] | None = None,
     group_steps: dict[int, tuple[str, Column, str]] | None = None,
-    salt: int | str | None = None,
-    hot_key_dir: str | None = None,
-    auto_salt_r: int = 8,
-    hot_threshold: int | None = None,
+    salt: int | None = None,
 ) -> DataFrame:
     """Streaming N-step followed-by chain `e1=A -> e2=B -> ... WITHIN d`
     per key (reference stream_pre_state_processor.rs runs arbitrary chains;
-    the 2-step ``followed_by_stream`` is the N=2 special case kept for its
-    leaner state layout).
+    a 1-step chain with ``absent_final`` is `A -> NOT B FOR d`, a 2-step
+    chain is plain followed-by).
 
     Semantics match the relational compiler's PATTERN mode: every step-0
     event opens a partial match (EVERY; with ``every=False`` the key fires
@@ -624,7 +164,9 @@ def chain_stream(
     partial advances exactly as unsalted — the sub-key union IS the
     unsalted output. Requires ``every=True`` (fire-once is per-KEY state
     that sub-keys cannot share). Cost: continuation-event volume ×R —
-    right when step-0 events dominate the stream.
+    right when step-0 events dominate the stream. Unsalted, a per-batch
+    detector warns (executor log) when one key exceeds
+    HOT_KEY_WARN_EVENTS events in a micro-batch.
 
     Output: ``key`` + per step ``{alias}_{ts_col}`` and ``{alias}_{c}`` for
     each payload column.
@@ -676,8 +218,8 @@ def chain_stream(
         tagged = tagged.withColumn(f"_is_{i}b", pred2.cast("boolean"))
     if absent_final is not None:
         tagged = tagged.withColumn("_is_ab", absent_final[0].cast("boolean"))
-    auto = salt in ("auto", "auto-live")
-    if salt is not None:
+    salted = salt is not None
+    if salted:
         if not every:
             raise ValueError(
                 "salt requires every=True: fire-once is per-KEY state that "
@@ -690,35 +232,26 @@ def chain_stream(
         later = F.lit(False)
         for fcol in later_flags:
             later = later | F.coalesce(fcol, F.lit(False))
-        if auto:
-            if not hot_key_dir:
-                raise ValueError("salt='auto' requires hot_key_dir")
-            tagged = _auto_salt(
-                tagged, ts_col, key_col, payload_cols, hot_key_dir,
-                auto_salt_r, repl_cond=later, anchor_col="_is_0",
-                live=salt == "auto-live",
+        if not isinstance(salt, int) or salt < 1:
+            raise ValueError(f"salt must be an int >= 1, got {salt!r}")
+        own = F.pmod(
+            F.xxhash64(*[F.col(c) for c in [ts_col, *payload_cols]]),
+            F.lit(salt),
+        )
+        tagged = (
+            tagged.withColumn(
+                "_salt",
+                F.explode(
+                    F.when(
+                        later,
+                        F.sequence(
+                            F.lit(0).cast("long"), F.lit(salt - 1).cast("long")
+                        ),
+                    ).otherwise(F.array(own))
+                ),
             )
-        else:
-            if salt < 1:
-                raise ValueError("salt must be >= 1")
-            own = F.pmod(
-                F.xxhash64(*[F.col(c) for c in [ts_col, *payload_cols]]),
-                F.lit(salt),
-            )
-            tagged = (
-                tagged.withColumn(
-                    "_salt",
-                    F.explode(
-                        F.when(
-                            later,
-                            F.sequence(
-                                F.lit(0).cast("long"), F.lit(salt - 1).cast("long")
-                            ),
-                        ).otherwise(F.array(own))
-                    ),
-                )
-                .withColumn("_is_0", F.col("_is_0") & (F.col("_salt") == own))
-            )
+            .withColumn("_is_0", F.col("_is_0") & (F.col("_salt") == own))
+        )
     # run() must only close over plain Python values (Column handles hold
     # JVM locks cloudpickle can't ship) — reduce absent_final to a flag
     has_absent = absent_final is not None
@@ -797,10 +330,8 @@ def chain_stream(
         rows = pd.concat(list(pdfs), ignore_index=True).sort_values(
             ts_col, kind="mergesort"
         )
-        if auto and key[1] == 0 and len(rows) > (
-            hot_threshold or HOT_KEY_WARN_EVENTS
-        ):
-            _mark_hot_key(hot_key_dir, str(key[0]))
+        if not salted:
+            _warn_hot_key(key[0], len(rows))
         # vectorized row access (one cast per column, not a dict per event);
         # rows matching no step / group / cancel predicate are skipped — they
         # cannot change NFA state, and horizon eviction is re-checked both on
@@ -993,7 +524,7 @@ def chain_stream(
             built.append(tuple(row))
         return pd.DataFrame(built, columns=out_columns)
 
-    group_cols = [key_col, "_salt"] if salt is not None else [key_col]
+    group_cols = [key_col, "_salt"] if salted else [key_col]
     return tagged.groupBy(*group_cols).applyInPandasWithState(
         run, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
     )
@@ -1168,8 +699,10 @@ def logical_and_stream_payload(
     payload_cols: list[str] | None = None,
     late: str = "0 seconds",
 ) -> DataFrame:
-    """`e1=A AND e2=B` over a live stream with FULL payload capture — the
-    SQL-routing variant of ``logical_and_stream`` (which carries one double).
+    """`e1=A AND e2=B` over a live stream with FULL payload capture
+    (reference logical_pre_state_processor.rs AND mode): every (A, B) pair
+    on the key with ``|tA − tB| ≤ d`` fires at the later of the two — the
+    pair set of the batch ``pattern.logical_and`` join.
 
     Output: key + ``{a1}_{ts_col}``/``{a1}_{col}…`` + ``{a2}_…`` +
     ``_match_ts`` — the same column names the relational first-step group
@@ -1297,243 +830,3 @@ def logical_and_stream_payload(
         run, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
     )
 
-
-def logical_and_stream(
-    df: DataFrame,
-    ts_col: str,
-    key_col: str,
-    first: Column,
-    second: Column,
-    within_seconds: int,
-    value_col: str,
-    late: str = "0 seconds",
-) -> DataFrame:
-    """Streaming `e1=A AND e2=B` (reference logical_pre_state_processor.rs
-    AND mode): every (A, B) pair on the key with ``|tA − tB| ≤ d`` fires at
-    the later of the two — the pair set of the batch ``pattern.logical_and``
-    join. State = the in-horizon A and B buffers per key.
-
-    Output: (key, e1_ts, e1_value, e2_ts, e2_value, matched_at).
-    """
-    within_us = within_seconds * US
-    tagged = (
-        watermarked(df, ts_col, late)
-        .withColumn("_is_a", first.cast("boolean"))
-        .withColumn("_is_b", second.cast("boolean"))
-        .filter(F.col("_is_a") | F.col("_is_b"))
-    )
-    ktype = dict((f.name, f.dataType) for f in df.schema.fields)[key_col].simpleString()
-    tstype = df.schema[ts_col].dataType.simpleString()
-    out_schema = (
-        f"{key_col} {ktype}, e1_ts {tstype}, e1_value double, "
-        f"e2_ts {tstype}, e2_value double, matched_at {tstype}"
-    )
-    state_schema = (
-        "a_ts array<long>, a_val array<double>, b_ts array<long>, b_val array<double>"
-    )
-
-    def run(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        a_buf: list[tuple[int, float]] = []
-        b_buf: list[tuple[int, float]] = []
-        if state.exists:
-            ats, avs, bts, bvs = state.get
-            a_buf = list(zip(ats or [], avs or []))
-            b_buf = list(zip(bts or [], bvs or []))
-        rows = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            ts_col, kind="mergesort"
-        )
-        out = []
-
-        def emit(ta: int, va: float, tb: int, vb: float) -> None:
-            out.append(
-                (
-                    key[0],
-                    pd.Timestamp(ta * 1000),
-                    va,
-                    pd.Timestamp(tb * 1000),
-                    vb,
-                    pd.Timestamp(max(ta, tb) * 1000),
-                )
-            )
-
-        ts_us = _ts_us_arr(rows[ts_col])
-        is_a = _bool_arr(rows["_is_a"])
-        is_b = _bool_arr(rows["_is_b"])
-        vals = rows[value_col].to_numpy(dtype="float64", na_value=float("nan"))
-        for j in range(len(rows)):
-            t = int(ts_us[j])
-            v = float(vals[j])
-            ia, ib = bool(is_a[j]), bool(is_b[j])
-            if ia:
-                for tb, vb in b_buf:
-                    if abs(t - tb) <= within_us:
-                        emit(t, v, tb, vb)
-            if ib:
-                for ta, va in a_buf:
-                    if abs(t - ta) <= within_us:
-                        emit(ta, va, t, v)
-            if ia and ib:
-                emit(t, v, t, v)  # an event matching both pairs with itself
-            if ia:
-                a_buf.append((t, v))
-            if ib:
-                b_buf.append((t, v))
-        if len(rows):
-            now = _us(rows[ts_col].iloc[-1])
-            a_buf = [(ta, va) for ta, va in a_buf if now - ta <= within_us]
-            b_buf = [(tb, vb) for tb, vb in b_buf if now - tb <= within_us]
-        if a_buf or b_buf:
-            state.update(
-                (
-                    [t for t, _ in a_buf],
-                    [v for _, v in a_buf],
-                    [t for t, _ in b_buf],
-                    [v for _, v in b_buf],
-                )
-            )
-            newest = max([t for t, _ in a_buf] + [t for t, _ in b_buf])
-            _set_timeout(state, newest // 1000 + within_seconds * 1000)
-        else:
-            state.remove()
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    key_col, "e1_ts", "e1_value", "e2_ts", "e2_value", "matched_at",
-                ],
-            )
-
-    return tagged.groupBy(key_col).applyInPandasWithState(
-        run, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-    )
-
-
-def length_batch_stream(
-    df: DataFrame,
-    ts_col: str,
-    key_col: str,
-    n: int,
-    value_col: str,
-) -> DataFrame:
-    """Streaming lengthBatch(n): emit (count, sum, min, max) once every n
-    events per key (reference window/mod.rs:645 + 815-LoC state holder —
-    here the state is the partial batch buffer).
-    """
-    out_schema = (
-        f"{key_col} string, batch_id long, n long, "
-        f"sum_value double, min_value double, max_value double"
-    )
-    state_schema = "batch_id long, buf_ts array<long>, buf_val array<double>"
-
-    def run(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        batch_id, buf = 0, []
-        if state.exists:
-            bid, bts, bvs = state.get
-            batch_id = bid or 0
-            buf = list(zip(bts or [], bvs or []))
-        rows = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            ts_col, kind="mergesort"
-        )
-        out = []
-        ts_us = _ts_us_arr(rows[ts_col])
-        in_vals = rows[value_col].to_numpy(dtype="float64", na_value=float("nan"))
-        for j in range(len(rows)):
-            buf.append((int(ts_us[j]), float(in_vals[j])))
-            if len(buf) == n:
-                vals = [v for _, v in buf]
-                out.append(
-                    (key[0], batch_id, n, float(sum(vals)), min(vals), max(vals))
-                )
-                batch_id += 1
-                buf = []
-        state.update((batch_id, [t for t, _ in buf], [v for _, v in buf]))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[key_col, "batch_id", "n", "sum_value", "min_value", "max_value"],
-            )
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        run, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def time_sliding_stream(
-    df: DataFrame,
-    ts_col: str,
-    key_col: str,
-    duration_seconds: int,
-    value_col: str,
-    late: str = "0 seconds",
-) -> DataFrame:
-    """Streaming time(d): per-EVENT emission of the trailing-d aggregate
-    (reference window/mod.rs:196 — every arrival sees the aggregate over
-    the last d). State per key = the in-window event buffer; arrivals evict
-    expired entries, append, and emit one row. Eviction keeps state ≤ the
-    events inside d per key — the same bound the reference's window buffer
-    held.
-
-    Output: (key, ts, n, sum_value, min_value, max_value).
-    """
-    dur_us = duration_seconds * US
-    tagged = watermarked(df, ts_col, late)
-
-    tstype = df.schema[ts_col].dataType.simpleString()
-    out_schema = (
-        f"{key_col} string, ts {tstype}, n long, "
-        f"sum_value double, min_value double, max_value double"
-    )
-    state_schema = "buf_ts array<long>, buf_val array<double>"
-
-    def run(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        buf: list[tuple[int, float]] = []
-        if state.exists:
-            bts, bvs = state.get
-            buf = list(zip(bts or [], bvs or []))
-        rows = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            ts_col, kind="mergesort"
-        )
-        ts_us = _ts_us_arr(rows[ts_col])
-        in_vals = rows[value_col].to_numpy(dtype="float64", na_value=float("nan"))
-        m = len(rows)
-        ns = np.empty(m, dtype="int64")
-        sums = np.empty(m, dtype="float64")
-        mins = np.empty(m, dtype="float64")
-        maxs = np.empty(m, dtype="float64")
-        for j in range(m):
-            t = int(ts_us[j])
-            buf = [(bt, bv) for bt, bv in buf if t - bt < dur_us]
-            buf.append((t, float(in_vals[j])))
-            vals = [v for _, v in buf]
-            ns[j] = len(vals)
-            sums[j] = sum(vals)
-            mins[j] = min(vals)
-            maxs[j] = max(vals)
-        if buf:
-            state.update(([t for t, _ in buf], [v for _, v in buf]))
-            _set_timeout(state, max(t for t, _ in buf) // 1000 + duration_seconds * 1000)
-        else:
-            state.remove()
-        if m:
-            # one output row per arrival, in sorted order — the ts column IS
-            # the sorted input column (no per-row Timestamp re-construction)
-            yield pd.DataFrame(
-                {
-                    key_col: np.repeat(key[0], m),
-                    "ts": rows[ts_col].to_numpy(),
-                    "n": ns,
-                    "sum_value": sums,
-                    "min_value": mins,
-                    "max_value": maxs,
-                }
-            )
-
-    return tagged.groupBy(key_col).applyInPandasWithState(
-        run, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-    )

@@ -35,3 +35,51 @@ def rows(df, *cols, order_by=None):
         df = df.select(*cols)
     out = [tuple(r) for r in df.collect()]
     return sorted(out, key=lambda t: tuple(repr(x) for x in t))
+
+
+def followed_by_chain(
+    df, ts_col, key_col, first, second, within_seconds, value_col, salt=None
+):
+    """`e1=first -> e2=second WITHIN d` as the 2-step ``chain_stream`` that
+    SqlApp compiles it to, projected to (key, e1_ts, e1_value, e2_ts,
+    e2_value, delay_seconds)."""
+    from pyspark.sql import functions as F
+
+    from engine_spark.streaming import nfa
+
+    out = nfa.chain_stream(
+        df, ts_col, key_col,
+        steps=[("e1", first), ("e2", second)],
+        within_seconds=within_seconds, payload_cols=[value_col], salt=salt,
+    )
+    return out.select(
+        key_col,
+        "e1_ts",
+        F.col(f"e1_{value_col}").alias("e1_value"),
+        "e2_ts",
+        F.col(f"e2_{value_col}").alias("e2_value"),
+        ((F.unix_micros("e2_ts") - F.unix_micros("e1_ts")) / 1e6).alias(
+            "delay_seconds"
+        ),
+    )
+
+
+def absent_chain(
+    df, ts_col, key_col, first, absent, within_seconds, value_col, salt=None
+):
+    """`e1=first -> NOT absent FOR d` as the 1-step
+    ``chain_stream(absent_final=…)`` that SqlApp compiles it to, projected
+    to (key, e1_ts, e1_value)."""
+    from pyspark.sql import functions as F
+
+    from engine_spark.streaming import nfa
+
+    out = nfa.chain_stream(
+        df, ts_col, key_col,
+        steps=[("e1", first)],
+        within_seconds=within_seconds, payload_cols=[value_col],
+        absent_final=(absent, float(within_seconds)), salt=salt,
+    )
+    return out.select(
+        key_col, "e1_ts", F.col(f"e1_{value_col}").alias("e1_value")
+    )

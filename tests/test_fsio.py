@@ -1,9 +1,9 @@
 """Checkpoint-grade filesystem plumbing (engine_spark/fsio.py).
 
-The streaming state stores (BloomDedupStore epochs, hot-key marker
-registry) must run against the same substrate as the Spark checkpoint
-dir — hdfs://, s3a://, file:// or a bare local path — not only a POSIX
-mount (round-7 advice). These tests drive every store operation through
+The streaming state stores (BloomDedupStore epochs, the incremental
+stores' epoch logs) must run against the same substrate as the Spark
+checkpoint dir — hdfs://, s3a://, file:// or a bare local path — not
+only a POSIX mount (round-7 advice). These tests drive every store operation through
 an explicit ``file:///``-scheme Hadoop path, which exercises the exact
 JVM FileSystem code path a cluster deployment uses (LocalFileSystem is
 checksummed, so .crc side-files also prove the listing filters hold).
@@ -15,7 +15,7 @@ import os
 
 import pytest
 
-from engine_spark.fsio import HadoopFS, atomic_publish_file
+from engine_spark.fsio import HadoopFS
 
 
 def test_hadoopfs_roundtrip_file_scheme(spark, tmp_path):
@@ -44,17 +44,6 @@ def test_hadoopfs_bare_local_path_resolves(spark, tmp_path):
     fs.write_bytes(str(tmp_path / "x"), b"ok")
     assert (tmp_path / "x").read_bytes() == b"ok"
     assert fs.read_bytes(str(tmp_path / "x")) == b"ok"
-
-
-def test_atomic_publish_file_local_and_uri(tmp_path):
-    p1 = str(tmp_path / "markers" / "m1.json")
-    assert atomic_publish_file(p1, b'{"k": "a"}\n')
-    assert open(p1, "rb").read() == b'{"k": "a"}\n'
-    # no stray temp siblings after publish
-    assert os.listdir(tmp_path / "markers") == ["m1.json"]
-    p2 = f"file://{tmp_path}/markers/m2.json"
-    assert atomic_publish_file(p2, b'{"k": "b"}\n')
-    assert open(tmp_path / "markers" / "m2.json", "rb").read() == b'{"k": "b"}\n'
 
 
 def test_bloom_store_over_file_scheme(spark, tmp_path):
@@ -129,58 +118,6 @@ def test_bloom_null_text_is_total_and_never_dup(spark, tmp_path):
     assert r2 == {10: False, 11: True}
     committed = spark.read.parquet(f"{store.hash_dir}/epoch-0000000000")
     assert committed.filter("full is null").count() == 0
-
-
-def test_hot_key_marker_file_scheme_roundtrip(spark, tmp_path):
-    """_mark_hot_key publishes through a file:// URI (the pyarrow.fs
-    executor path) and _auto_salt's plan-build snapshot reads it back:
-    the marked key fans across sub-keys, cold keys stay in sub-key 0."""
-    from pyspark.sql import functions as F
-
-    from engine_spark.streaming.nfa import _auto_salt, _mark_hot_key
-
-    hot_dir = f"file://{tmp_path}/hot_keys"
-    HadoopFS(spark, hot_dir).mkdirs(hot_dir)
-    _mark_hot_key(hot_dir, "hotk")
-    _mark_hot_key(hot_dir, "hotk")  # idempotent second publish
-    local = tmp_path / "hot_keys"
-    assert len([f for f in os.listdir(local) if f.endswith(".json")]) == 1
-
-    rows = [("hotk", "b", float(i)) for i in range(64)] + [
-        ("cold", "b", 1.0),
-        ("hotk", "a", 7.0),
-        ("cold", "a", 2.0),
-    ]
-    df = (
-        spark.createDataFrame(rows, "user string, etype string, v double")
-        .withColumn("ts", F.lit("2024-01-01T00:00:00").cast("timestamp"))
-        .withColumn("_is_a", F.col("etype") == "a")
-        .withColumn("_is_b", F.col("etype") == "b")
-    )
-    out = _auto_salt(df, "ts", "user", ["v"], hot_dir, r=4).collect()
-    hot_b_salts = {r._salt for r in out if r.user == "hotk" and r.etype == "b" and r.v == 0.0}
-    assert hot_b_salts == {0, 1, 2, 3}, "hot B events replicate to all sub-keys"
-    assert {r._salt for r in out if r.user == "cold"} == {0}
-    hot_a = [r for r in out if r.user == "hotk" and r.etype == "a"]
-    assert len(hot_a) == 1 and sum(r._is_a for r in hot_a) == 1
-
-
-def test_auto_salt_empty_registry_all_cold(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from engine_spark.streaming.nfa import _auto_salt
-
-    df = (
-        spark.createDataFrame(
-            [("u1", "a", 1.0), ("u2", "b", 2.0)],
-            "user string, etype string, v double",
-        )
-        .withColumn("ts", F.lit("2024-01-01T00:00:00").cast("timestamp"))
-        .withColumn("_is_a", F.col("etype") == "a")
-        .withColumn("_is_b", F.col("etype") == "b")
-    )
-    out = _auto_salt(df, "ts", "user", ["v"], str(tmp_path / "hk"), r=4).collect()
-    assert len(out) == 2 and {r._salt for r in out} == {0}
 
 
 def test_merged_ids_sidecar_corruption_aborts_compaction(spark, tmp_path):

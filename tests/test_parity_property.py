@@ -1,7 +1,7 @@
 """Property-based batch ↔ streaming parity for the CEP core.
 
 The batch `pattern.followed_by` (relational join+rank) and the streaming
-`nfa.followed_by_stream` (per-key state machine) implement the SAME
+`nfa.chain_stream` (per-key state machine) implement the SAME
 semantics by two completely different mechanisms. On any event sequence
 they must produce identical match sets — a far stronger statement than
 example-based tests, and the property the reference enforces implicitly by
@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from engine_spark.operators import pattern
 from engine_spark.streaming import nfa
 from engine_spark.streaming.harness import StreamRunner
+from tests.conftest import absent_chain, followed_by_chain
 
 T0 = datetime(2026, 1, 1, 12, 0)
 
@@ -92,7 +93,7 @@ def test_followed_by_batch_equals_streaming(spark, events, split):
             ]
         )
     r.run(
-        lambda sdf: nfa.followed_by_stream(
+        lambda sdf: followed_by_chain(
             sdf, "ts", "user",
             first=F.col("etype") == "login",
             second=F.col("etype") == "purchase",
@@ -216,7 +217,7 @@ def test_absent_batch_equals_streaming(spark, events):
     r.send([{"ts": (T0 + timedelta(hours=5)).isoformat(), "user": "zz", "etype": "view", "v": 0.0}])
     r.send([{"ts": (T0 + timedelta(hours=6)).isoformat(), "user": "zz", "etype": "view", "v": 0.0}])
     r.run(
-        lambda sdf: nfa.absent_stream(
+        lambda sdf: absent_chain(
             sdf, "ts", "user",
             first=F.col("etype") == "login",
             absent=F.col("etype") == "purchase",
@@ -409,6 +410,74 @@ def test_length_sliding_batch_equals_streaming(spark, events, split, n):
         )
     )
     stream_set = sorted((m["user"], m["v"], m["s"], m["c"]) for m in r.shutdown())
+    assert stream_set == batch_set
+
+
+@given(
+    events=st.lists(
+        st.tuples(
+            st.sampled_from(["u1", "u2"]),
+            st.integers(min_value=0, max_value=20),  # minute offset
+            st.integers(min_value=-5, max_value=5),  # value
+        ),
+        min_size=1,
+        max_size=12,
+        unique_by=lambda e: e[1],  # one event per minute: no ties
+    ),
+    split=st.integers(min_value=1, max_value=3),
+    minutes=st.integers(min_value=1, max_value=4),
+)
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_time_sliding_batch_equals_streaming(spark, events, split, minutes):
+    """The batch range frame (operators.windows.time_sliding,
+    ``rangeBetween(-d, 0)``) and the streaming keyed-state buffer
+    (streaming.windows.sliding_stream mode='time', the kernel behind a
+    live ``WINDOW('time', d)``) must agree on every event's trailing-d
+    aggregate. Offsets are whole minutes and d is a whole number of
+    minutes, so events exactly d apart are common: both sides keep them
+    in the frame."""
+    from engine_spark.operators import windows as BW
+    from engine_spark.streaming import windows as SW2
+
+    d = minutes * 60
+    rows = sorted(
+        [(T0 + timedelta(minutes=m), u, float(v)) for u, m, v in events],
+        key=lambda r: r[0],
+    )
+
+    df = spark.createDataFrame(rows, "ts timestamp, user string, v double")
+    batch = BW.time_sliding(
+        df, "ts", d, partition_by=["user"],
+        aggs={"s": F.sum("v"), "c": F.count(F.lit(1))},
+    )
+    batch_set = sorted(
+        (r["user"], r["ts"], r["s"], r["c"])
+        for r in batch.select("user", "ts", "s", "c").collect()
+    )
+
+    r = StreamRunner(spark, "ts timestamp, user string, v double")
+    nn = max(1, len(rows) // split)
+    for i in range(0, len(rows), nn):
+        r.send(
+            [
+                {"ts": t.strftime("%Y-%m-%dT%H:%M:%S"), "user": u, "v": v}
+                for t, u, v in rows[i : i + nn]
+            ]
+        )
+    r.run(
+        lambda sdf: SW2.sliding_stream(
+            sdf, "ts", "user",
+            [("sum", "v", "s"), ("count", None, "c")],
+            mode="time", size=d,
+        )
+    )
+    stream_set = sorted(
+        (m["user"], m["ts"], m["s"], m["c"]) for m in r.shutdown()
+    )
     assert stream_set == batch_set
 
 
@@ -638,7 +707,7 @@ def test_followed_by_ties_batch_equals_streaming(spark, events, split):
             ]
         )
     r.run(
-        lambda sdf: nfa.followed_by_stream(
+        lambda sdf: followed_by_chain(
             sdf, "ts", "user",
             first=F.col("etype") == "login",
             second=F.col("etype") == "purchase",
@@ -681,7 +750,7 @@ def test_absent_ties_batch_equals_streaming(spark, events):
     r.send([{"ts": (T0 + timedelta(hours=5)).isoformat(), "user": "zz", "etype": "view", "v": 0.0}])
     r.send([{"ts": (T0 + timedelta(hours=6)).isoformat(), "user": "zz", "etype": "view", "v": 0.0}])
     r.run(
-        lambda sdf: nfa.absent_stream(
+        lambda sdf: absent_chain(
             sdf, "ts", "user",
             first=F.col("etype") == "login",
             absent=F.col("etype") == "purchase",

@@ -549,3 +549,13 @@ def test_cli_metrics_port_serves_scrapes_during_run(spark, tmp_path, capsys):
         sys.path.remove(str(plug_dir))
         os.environ.pop("TEST_METRICS_PORT", None)
         os.environ.pop("TEST_METRICS_SCRAPED", None)
+
+
+def test_default_driver_memory_never_above_host():
+    """Without SPARK_GRAFT_DRIVER_MEM the driver heap defaults to at most
+    half of the host's physical memory, never a fixed size above it."""
+    from engine_spark.session import default_driver_memory
+
+    mem = default_driver_memory()
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert mem.endswith("m") and 0 < int(mem[:-1]) * 2**20 <= host // 2

@@ -12,6 +12,7 @@ import uuid
 from pyspark.sql import functions as F
 
 from engine_spark.streaming.harness import StreamRunner
+from tests.conftest import absent_chain, followed_by_chain
 
 
 def test_bucketed_join_has_no_exchange(spark):
@@ -69,8 +70,6 @@ def test_nfa_hot_key_throughput_floor(spark):
     to stay robust on noisy VMs)."""
     import time
 
-    from engine_spark.streaming import nfa
-
     n = 40_000
     base = 1_700_000_000
     rows_ = [
@@ -87,7 +86,7 @@ def test_nfa_hot_key_throughput_floor(spark):
     r = StreamRunner(spark, "ts timestamp, user string, etype string, v double")
 
     def build(sdf):
-        return nfa.followed_by_stream(
+        return followed_by_chain(
             sdf, "ts", "user",
             first=F.col("etype") == "a",
             second=F.col("etype") == "b",
@@ -136,8 +135,6 @@ def test_nfa_salted_matches_unsalted_exactly(spark):
     B). Includes an event that is both A and B (must not double-open)."""
     import time
 
-    from engine_spark.streaming import nfa
-
     base = 1_700_000_000
     rows_ = []
     for i in range(400):
@@ -155,7 +152,7 @@ def test_nfa_salted_matches_unsalted_exactly(spark):
 
     def build(salt):
         def b(sdf):
-            return nfa.followed_by_stream(
+            return followed_by_chain(
                 sdf, "ts", "user",
                 first=F.col("etype").isin("a", "ab"),
                 second=F.col("etype").isin("b", "ab"),
@@ -177,134 +174,6 @@ def test_nfa_salted_matches_unsalted_exactly(spark):
     assert outs[4] == outs[None] and len(outs[None]) > 100
 
 
-def test_nfa_auto_salt_marks_then_rekeys_next_batch(spark, tmp_path):
-    """salt='auto': a key crossing hot_threshold in one micro-batch gets a
-    persisted marker, and the NEXT micro-batch's plan re-keys it across
-    auto_salt_r sub-keys — with the cold→hot boundary EXACT (opens from
-    the cold batch, living in sub-key 0, still meet B events from the hot
-    batch because B replicates to all sub-keys including 0). Same match
-    set as unsalted; cold keys stay unreplicated."""
-    import os
-    import time
-
-    from engine_spark.streaming import nfa
-
-    hot_dir = str(tmp_path / "hot_keys")
-    base = 1_700_000_000
-
-    def ev(i, user, et, v):
-        return {
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%S", time.gmtime(base + i)),
-            "user": user,
-            "etype": et,
-            "v": float(v),
-        }
-
-    # batch 1: 25 A-events on key 'h' (over the threshold of 20), plus a
-    # cold key 'c' with one A — no B yet, so all state crosses the batch
-    # boundary opened-in-cold-mode
-    batch1 = [ev(i, "h", "a", i) for i in range(25)] + [ev(30, "c", "a", 500)]
-    # batch 2: new A's on 'h' (these hash across sub-keys), then one B on
-    # 'h' and one on 'c'
-    batch2 = (
-        [ev(50 + i, "h", "a", 100 + i) for i in range(4)]
-        + [ev(100, "h", "b", 999), ev(101, "c", "b", 888)]
-    )
-
-    def build(sdf):
-        return nfa.followed_by_stream(
-            sdf, "ts", "user",
-            first=F.col("etype") == "a",
-            second=F.col("etype") == "b",
-            within_seconds=3600, value_col="v",
-            salt="auto", hot_key_dir=hot_dir, auto_salt_r=4,
-            hot_threshold=20,
-        )
-
-    r = StreamRunner(spark, "ts timestamp, user string, etype string, v double")
-    r.send(batch1)
-    r.run(build)
-    markers = os.listdir(hot_dir)
-    assert len(markers) == 1, "exactly the hot key 'h' should be marked"
-    r.send(batch2)
-    r.run(build)
-    got = r.shutdown()
-    h = sorted(m["e1_value"] for m in got if m["user"] == "h")
-    c = [(m["e1_value"], m["e2_value"]) for m in got if m["user"] == "c"]
-    # every one of the 29 h-opens (25 cold-batch + 4 hot-batch) matches the
-    # single B exactly once — duplicates would mean B met a replicated A
-    # role; misses would mean a sub-key lost state or B skipped sub-key 0
-    assert h == sorted(float(x) for x in list(range(25)) + [100, 101, 102, 103])
-    assert all(m["e2_value"] == 999.0 for m in got if m["user"] == "h")
-    assert c == [(500.0, 888.0)]
-
-
-def test_nfa_auto_salt_chain_and_absent_match_unsalted(spark, tmp_path):
-    """salt='auto' on chain_stream and absent_stream: with a threshold low
-    enough that the busy key flips hot mid-stream, the match sets still
-    equal the unsalted runs exactly (sticky membership + B-to-all-sub-keys
-    keeps the transition exact)."""
-    import time
-
-    from engine_spark.streaming import nfa
-
-    base = 1_700_000_000
-    rows_ = []
-    for i in range(240):
-        et = ["a", "b", "c", "x"][i % 4] if i % 4 != 3 or i % 8 else "a"
-        rows_.append(
-            {
-                "ts": time.strftime("%Y-%m-%dT%H:%M:%S", time.gmtime(base + i)),
-                "user": "hot" if i % 5 else f"u{i % 3}",
-                "etype": et,
-                "v": float(i),
-            }
-        )
-
-    def chain_build(salt, hot_dir):
-        def b(sdf):
-            return nfa.chain_stream(
-                sdf, "ts", "user",
-                steps=[("e1", F.col("etype") == "a"),
-                       ("e2", F.col("etype") == "b"),
-                       ("e3", F.col("etype") == "c")],
-                within_seconds=60, payload_cols=["v"],
-                salt=salt, hot_key_dir=hot_dir, auto_salt_r=4,
-                hot_threshold=30,
-            )
-        return b
-
-    def absent_build(salt, hot_dir):
-        def b(sdf):
-            return nfa.absent_stream(
-                sdf, "ts", "user",
-                first=F.col("etype") == "a",
-                absent=F.col("etype") == "b",
-                within_seconds=5, value_col="v",
-                salt=salt, hot_key_dir=hot_dir, auto_salt_r=4,
-                hot_threshold=30,
-            )
-        return b
-
-    for name, build_fn, keyf in (
-        ("chain", chain_build, lambda m: (m["user"], m["e1_v"], m["e2_v"], m["e3_v"])),
-        ("absent", absent_build, lambda m: (m["user"], m["e1_value"])),
-    ):
-        outs = {}
-        for mode in ("none", "auto"):
-            hot_dir = str(tmp_path / f"{name}_{mode}")
-            r = StreamRunner(
-                spark, "ts timestamp, user string, etype string, v double"
-            )
-            salt = None if mode == "none" else "auto"
-            r.send(rows_[:160])
-            r.run(build_fn(salt, hot_dir))
-            r.send(rows_[160:])
-            r.run(build_fn(salt, hot_dir))
-            outs[mode] = sorted(keyf(m) for m in r.shutdown())
-        assert outs["auto"] == outs["none"] and len(outs["none"]) > 3, name
-
-
 def test_nfa_salted_hot_key_throughput(spark):
     """The hot-key fix, measured: a 320k-event single hot key at a
     probe-heavy mix (2% B) through salt=16 sustains >150k events/s where
@@ -316,8 +185,6 @@ def test_nfa_salted_hot_key_throughput(spark):
     bound (salted >= 1.8x unsalted) carries the claim when the VM is too
     noisy for the calm-VM absolute number (~340k measured)."""
     import time
-
-    from engine_spark.streaming import nfa
 
     n = 320_000
     base = 1_700_000_000
@@ -337,7 +204,7 @@ def test_nfa_salted_hot_key_throughput(spark):
         )
 
         def build(sdf):
-            return nfa.followed_by_stream(
+            return followed_by_chain(
                 sdf, "ts", "user",
                 first=F.col("etype") == "a",
                 second=F.col("etype") == "b",
@@ -378,11 +245,10 @@ def test_nfa_salted_hot_key_throughput(spark):
 
 
 def test_nfa_salted_absent_matches_unsalted(spark):
-    """absent_stream(salt=R): A events hash to one sub-key, cancelling B
-    events replicate to all — identical emission set to unsalted."""
+    """`A -> NOT B FOR d` as chain_stream(absent_final=…, salt=R): A events
+    hash to one sub-key, cancelling B events replicate to all — identical
+    emission set to unsalted."""
     import time
-
-    from engine_spark.streaming import nfa
 
     base = 1_700_000_000
     rows_ = []
@@ -406,7 +272,7 @@ def test_nfa_salted_absent_matches_unsalted(spark):
     for salt in (None, 4):
         r = StreamRunner(spark, "ts timestamp, user string, etype string, v double")
         r.send(rows_[:150])
-        r.run(lambda sdf: nfa.absent_stream(
+        r.run(lambda sdf: absent_chain(
             sdf, "ts", "user",
             first=F.col("etype") == "a", absent=F.col("etype") == "b",
             within_seconds=20, value_col="v", salt=salt,
@@ -414,7 +280,7 @@ def test_nfa_salted_absent_matches_unsalted(spark):
         r.send(rows_[150:])
         r.send([sentinel[0]])
         r.send([sentinel[1]])
-        r.run(lambda sdf: nfa.absent_stream(
+        r.run(lambda sdf: absent_chain(
             sdf, "ts", "user",
             first=F.col("etype") == "a", absent=F.col("etype") == "b",
             within_seconds=20, value_col="v", salt=salt,

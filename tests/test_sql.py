@@ -287,6 +287,27 @@ def test_partition_with_key(spark):
     assert rows(outs["Out"]) == [("x", 1.0), ("x", 3.0), ("y", 9.0)]
 
 
+def test_statements_after_partition_block(spark):
+    """A PARTITION block closes at its own END: the CREATE STREAM and the
+    INSERT that follow it parse as statements of their own and run."""
+    app = SqlApp(spark)
+    app.register_stream(
+        "In", spark.createDataFrame([("x", 1.0), ("x", 2.0), ("y", 9.0)], "symbol string, price double")
+    )
+    text = """
+        PARTITION WITH (symbol OF In) BEGIN
+          INSERT INTO Out SELECT symbol, sum(price) AS s FROM In WINDOW('length', 2);
+        END;
+        CREATE STREAM Big (symbol STRING, price DOUBLE);
+        INSERT INTO Big SELECT symbol, price FROM In WHERE price > 5;
+        """
+    stmts = parse_app(text)
+    assert [type(s).__name__ for s in stmts] == ["Partition", "CreateStream", "Query"]
+    outs = app.sql(text)
+    assert rows(outs["Out"]) == [("x", 1.0), ("x", 3.0), ("y", 9.0)]
+    assert rows(outs["Big"]) == [("y", 9.0)]
+
+
 def test_partition_with_range(spark):
     """Range partition (reference range_partition_type.rs /
     partition_type.rs:7-21): `cond AS 'label' OR cond AS 'label' OF S` —

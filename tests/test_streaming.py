@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from engine_spark.streaming.harness import StreamRunner
 from engine_spark.streaming import nfa, windows as SW
+from tests.conftest import absent_chain, followed_by_chain
 
 
 def _ts(minute: int, second: int = 0) -> str:
@@ -53,7 +54,7 @@ def test_nfa_followed_by_across_microbatches(spark):
     # B arrives in a LATER micro-batch — state must persist
     r.send([{"ts": _ts(2), "user": "u1", "etype": "purchase", "v": 9.0}])
     r.run(
-        lambda df: nfa.followed_by_stream(
+        lambda df: followed_by_chain(
             df, "ts", "user",
             first=F.col("etype") == "login",
             second=F.col("etype") == "purchase",
@@ -73,7 +74,7 @@ def test_nfa_followed_by_respects_within(spark):
     r.send([{"ts": _ts(0), "user": "u1", "etype": "login", "v": 1.0}])
     r.send([{"ts": _ts(30), "user": "u1", "etype": "purchase", "v": 9.0}])
     r.run(
-        lambda df: nfa.followed_by_stream(
+        lambda df: followed_by_chain(
             df, "ts", "user",
             first=F.col("etype") == "login",
             second=F.col("etype") == "purchase",
@@ -91,7 +92,7 @@ def test_nfa_every_semantics_multiple_starts(spark):
         {"ts": _ts(2), "user": "u1", "etype": "purchase", "v": 9.0},
     ])
     r.run(
-        lambda df: nfa.followed_by_stream(
+        lambda df: followed_by_chain(
             df, "ts", "user",
             first=F.col("etype") == "login",
             second=F.col("etype") == "purchase",
@@ -115,7 +116,7 @@ def test_nfa_absent_emits_after_timeout(spark):
     # one more batch so the timeout fires after the watermark advanced
     r.send([{"ts": _ts(41), "user": "u3", "etype": "view", "v": 0.0}])
     r.run(
-        lambda df: nfa.absent_stream(
+        lambda df: absent_chain(
             df, "ts", "user",
             first=F.col("etype") == "login",
             absent=F.col("etype") == "purchase",
@@ -136,7 +137,12 @@ def test_length_batch_stream_partial_batch_carries(spark):
     ])
     # 2 more events: completes the second batch of 2 across micro-batches
     r.send([{"ts": _ts(3), "user": "u1", "v": 4.0}])
-    r.run(lambda df: nfa.length_batch_stream(df, "ts", "user", 2, "v"))
+    r.run(
+        lambda df: SW.sliding_stream(
+            df, "ts", "user", [("sum", "v", "sum_value")],
+            mode="lengthbatch", size=2,
+        )
+    )
     out = r.shutdown()
     got = [(m["batch_id"], m["sum_value"]) for m in out]
     assert got == [(0, 3.0), (1, 7.0)]
@@ -188,7 +194,7 @@ def test_checkpoint_recovery_state_survives_restart(spark):
     r.send([{"ts": _ts(0), "user": "u1", "etype": "login", "v": 1.0}])
 
     def build(df):
-        return nfa.followed_by_stream(
+        return followed_by_chain(
             df, "ts", "user",
             first=F.col("etype") == "login",
             second=F.col("etype") == "purchase",
@@ -249,7 +255,12 @@ def test_time_sliding_stream_per_event_emission(spark):
         {"ts": _ts(1), "user": "u1", "v": 2.0},
     ])
     r.send([{"ts": _ts(10), "user": "u1", "v": 5.0}])  # 12:00/12:01 expired
-    r.run(lambda df: nfa.time_sliding_stream(df, "ts", "user", 120, "v"))
+    r.run(
+        lambda df: SW.sliding_stream(
+            df, "ts", "user", [("count", None, "n"), ("sum", "v", "sum_value")],
+            mode="time", size=120,
+        )
+    )
     out = {str(m["ts"]): (m["n"], m["sum_value"]) for m in r.shutdown()}
     assert out["2026-01-01 12:00:00"] == (1, 1.0)
     assert out["2026-01-01 12:01:00"] == (2, 3.0)
@@ -382,11 +393,13 @@ def test_logical_and_stream_pairs_both_orders(spark):
     r.send([{"ts": _ts(2), "user": "u1", "etype": "a", "v": 1.0}])
     r.send([{"ts": _ts(3), "user": "u1", "etype": "b", "v": 20.0}])
     r.run(
-        lambda df: nfa.logical_and_stream(
+        lambda df: nfa.logical_and_stream_payload(
             df, "ts", "user",
             first=F.col("etype") == "a",
             second=F.col("etype") == "b",
-            within_seconds=600, value_col="v",
+            within_seconds=600, payload_cols=["v"],
+        ).select(
+            F.col("e1_v").alias("e1_value"), F.col("e2_v").alias("e2_value")
         )
     )
     got = sorted((m["e1_value"], m["e2_value"]) for m in r.shutdown())
@@ -450,33 +463,28 @@ def test_sql_pattern_three_steps_on_live_stream(spark):
     assert got == [(1, 3, 4)]
 
 
-def test_sql_pattern_auto_salt_app_config(spark, tmp_path):
-    """SqlApp(nfa_salt='auto', nfa_hot_key_dir=...) routes the hot-key
-    config into the streaming NFA: a key crossing the threshold gets
-    marked and the SQL query's output stays exactly the unsalted result."""
-    import os
-
+def test_sql_pattern_auto_salt_app_config(spark):
+    """SqlApp(nfa_salt=4) routes the hot-key salt into the streaming NFA:
+    opens from one micro-batch, spread over 4 sub-keys, meet continuation
+    events from the next, and the SQL query's output stays exactly the
+    unsalted result."""
     from engine_spark.plans import SqlApp
     from engine_spark.plans.compiler import _Stream
 
-    hot_dir = str(tmp_path / "hot")
     r = StreamRunner(spark, "ts timestamp, user string, etype string, eid int")
-    # batch 1: 25 logins on u1 (> threshold 20) — marks u1 hot
+    # batch 1: 25 logins on u1, hashed across the sub-keys
     r.send(
         [{"ts": _ts(i), "user": "u1", "etype": "login", "eid": i}
          for i in range(25)]
     )
-    # batch 2: the continuation events arrive after the re-key
+    # batch 2: the continuation events replicate to every sub-key
     r.send([
         {"ts": _ts(30), "user": "u1", "etype": "view", "eid": 100},
         {"ts": _ts(31), "user": "u1", "etype": "purchase", "eid": 101},
     ])
 
     def build(sdf):
-        app = SqlApp(
-            spark, nfa_salt="auto", nfa_hot_key_dir=hot_dir,
-            nfa_auto_salt_r=4, nfa_hot_threshold=20,
-        )
+        app = SqlApp(spark, nfa_salt=4)
         app.streams["E"] = _Stream(df=sdf, ts_col="ts")
         return app.sql(
             "PARTITION WITH (user OF E) BEGIN "
@@ -488,10 +496,9 @@ def test_sql_pattern_auto_salt_app_config(spark, tmp_path):
 
     r.run(build)
     got = sorted((m["a"], m["b"], m["c"]) for m in r.shutdown())
-    # every one of the 25 opened logins (all from the cold batch, state in
-    # sub-key 0) completes through the post-re-key continuations
+    # every one of the 25 opened logins completes exactly once through
+    # the replicated continuations
     assert got == [(i, 100, 101) for i in range(25)]
-    assert len(os.listdir(hot_dir)) == 1
 
 
 def test_space_saving_state_bounded_and_heavy_hitters_kept(spark):
@@ -534,7 +541,7 @@ def test_persist_restore_named_revision_replays_state(spark):
     r = StreamRunner(spark, "ts timestamp, user string, etype string, v double")
 
     def build(df):
-        return nfa.followed_by_stream(
+        return followed_by_chain(
             df, "ts", "user",
             first=F.col("etype") == "login",
             second=F.col("etype") == "purchase",
@@ -1197,115 +1204,6 @@ def test_streaming_gapfill_allowed_late_event_before_first_hour(spark):
     assert all(g[3] for g in got[2:] if g[0] in (11, 12))
 
 
-def test_auto_live_salt_same_plan_rekeys_after_marker(spark, tmp_path, monkeypatch):
-    """salt='auto-live': the hot-key membership is evaluated per batch by
-    an executor-side TTL-cached reader, NOT frozen into the plan — so the
-    SAME DataFrame (built once, never re-planned) starts salting a key
-    after its marker lands mid-life. This is the per-micro-batch reload
-    the plan-build snapshot mode cannot do (VERDICT r8 task #4)."""
-    from engine_spark.streaming import nfa
-
-    monkeypatch.setattr(nfa, "HOT_RELOAD_TTL_S", 0.0)
-    hot = str(tmp_path / "hot")
-    from datetime import datetime as _dt
-
-    tagged = (
-        spark.createDataFrame(
-            [(_dt(2026, 1, 1, 12, 0), "u1", "a", 1.0),
-             (_dt(2026, 1, 1, 12, 1), "u1", "b", 2.0),
-             (_dt(2026, 1, 1, 12, 2), "u2", "b", 3.0)],
-            "ts timestamp, user string, etype string, v double",
-        )
-        .withColumn("_is_a", F.col("etype") == "a")
-        .withColumn("_is_b", F.col("etype") == "b")
-    )
-    plan = nfa._auto_salt(
-        tagged, "ts", "user", ["v"], hot, 4, live=True
-    )  # built ONCE — reused below without rebuilding
-    cold = plan.collect()
-    assert len(cold) == 3 and {r._salt for r in cold} == {0}
-
-    nfa._mark_hot_key(hot, "u1")  # marker lands AFTER the plan exists
-    hotrun = plan.collect()
-    u1_b = [r for r in hotrun if r.user == "u1" and r.etype == "b"]
-    assert sorted(r._salt for r in u1_b) == [0, 1, 2, 3]  # B fans to all R
-    u1_a = [r for r in hotrun if r.user == "u1" and r.etype == "a"]
-    assert len(u1_a) == 1 and u1_a[0]._is_a  # A owns exactly one sub-key
-    assert [r._salt for r in hotrun if r.user == "u2"] == [0]  # cold key
-
-
-def test_auto_live_salt_single_long_lived_query_exact(spark, tmp_path, monkeypatch):
-    """One writeStream.start() (no restart, no StreamRunner re-plan): a
-    marker written between micro-batches re-keys the next batch while the
-    match output stays exactly the unsalted result — every open A meets
-    the earliest B once, through the cold→hot transition."""
-    import json
-    import time
-
-    from engine_spark.streaming import nfa
-
-    monkeypatch.setattr(nfa, "HOT_RELOAD_TTL_S", 0.0)
-    hot = str(tmp_path / "hot")
-    indir = tmp_path / "in"
-    indir.mkdir()
-    n_sent = [0]
-
-    def feed(rows):
-        p = indir / f"b{n_sent[0]:05d}.json"
-        n_sent[0] += 1
-        with open(str(p) + ".tmp", "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-        (indir / (p.name + ".tmp")).rename(p)
-        t = 1_700_000_000 + n_sent[0]
-        import os as _os
-
-        _os.utime(p, (t, t))
-
-    feed([
-        {"ts": "2024-01-01 00:00:00", "user": "u1", "etype": "a", "v": float(i)}
-        for i in range(3)
-    ])
-    src = (
-        spark.readStream.schema("ts timestamp, user string, etype string, v double")
-        .option("maxFilesPerTrigger", "1")
-        .json(str(indir))
-    )
-    plan = nfa.followed_by_stream(
-        src, "ts", "user", F.col("etype") == "a", F.col("etype") == "b",
-        within_seconds=600, value_col="v",
-        salt="auto-live", hot_key_dir=hot, auto_salt_r=4,
-    )
-    got: list = []
-    q = (
-        plan.writeStream.foreachBatch(lambda b, _i: got.extend(b.collect()))
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="300 milliseconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if sum(p["numInputRows"] for p in q.recentProgress) >= 3:
-                break
-            time.sleep(0.2)
-        else:
-            raise AssertionError("batch 1 never processed")
-        nfa._mark_hot_key(hot, "u1")  # mid-query, between micro-batches
-        feed([{"ts": "2024-01-01 00:00:10", "user": "u1", "etype": "b", "v": 50.0},
-              {"ts": "2024-01-01 00:00:11", "user": "u1", "etype": "b", "v": 60.0}])
-        deadline = time.time() + 60
-        while time.time() < deadline and len(got) < 3:
-            time.sleep(0.2)
-    finally:
-        q.stop()
-    matches = sorted((r.e1_value, r.e2_value) for r in got)
-    # exactly once per opened A, each taking the EARLIEST B — no fan-out
-    # duplicates, no missed opens across the cold→hot re-key
-    assert matches == [(0.0, 50.0), (1.0, 50.0), (2.0, 50.0)]
-
-
 def test_streaming_cohort_drops_late_and_keeps_cohort_final(spark):
     """cohort_stream: once the watermark passes a user's cohort-day start
     the cohort is final — a later-arriving event for an EARLIER day is
@@ -1419,3 +1317,16 @@ def test_funnel_stream_state_survives_restart(spark):
         ("click", 10 * 60 * 1_000_000),
         ("purchase", 10 * 60 * 1_000_000),
     ]
+
+
+def test_hot_key_warning_points_to_static_salt(monkeypatch):
+    """The unsalted chain kernel's hot-key detector names the one
+    remaining fix: static salting through SqlApp or chain_stream."""
+    import warnings
+
+    monkeypatch.setattr(nfa, "HOT_KEY_WARN_EVENTS", 10)
+    with pytest.warns(UserWarning, match=r"SqlApp\(nfa_salt=R\).*chain_stream\(salt=R\)"):
+        nfa._warn_hot_key("u1", 11)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        nfa._warn_hot_key("u1", 10)  # at the threshold: silent
