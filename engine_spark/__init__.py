@@ -11,10 +11,11 @@ Layout (every module listed ships in this tree):
     session     — tuned SparkSession builder (AQE, Arrow, nanos parquet)
     catalog     — named-table registry over parquet dirs (testdata layout)
     functions   — EventFlux scalar-function registry → pyspark.sql.functions
-    operators   — windows, joins, aggregations, pattern (CEP), output_rate,
+    operators   — windows, joins, aggregations, output_rate,
                   triggers (cron windows + tick streams)
     sources     — source/sink registry + json/csv/bytes mappers, WITH(...)
-    plans       — EventFlux-SQL dialect parser + DataFrame compiler (SqlApp)
+    plans       — EventFlux-SQL dialect parser + DataFrame compiler (SqlApp),
+                  including the batch CEP pattern chain
     streaming   — AppRunner-style harness, streaming windows, per-key NFA
     tables      — Table DML (insert/update/delete/upsert), on-demand
                   queries, incremental multi-granularity aggregation

@@ -4150,8 +4150,7 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def fuzzy_pairs(docs: DataFrame) -> DataFrame:
     """Edit-distance near-dup pairs over any (doc_id, text) frame — the
-    operator behind the ``dedup_fuzzy`` gate (also driven by
-    tools/scaling_probe.py)."""
+    operator behind the ``dedup_fuzzy`` gate."""
     # ASCII-normalized prefix (see oracle comment: Spark levenshtein is
     # char-counting, DuckDB's byte-counting)
     keyed = docs.select(

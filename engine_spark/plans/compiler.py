@@ -13,7 +13,7 @@ Maps each dialect construct onto the operator library:
 | WINDOW SESSION(gap)/'session'   | operators.windows.session                |
 | WINDOW('sort', n, attr, dir…)   | operators.windows.sort_window            |
 | JOIN … ON                       | operators.joins (Catalyst strategy)      |
-| PATTERN / SEQUENCE              | operators.pattern chain (relational CEP) |
+| PATTERN / SEQUENCE              | join + first-match rank per hop (below)  |
 | PARTITION WITH (k OF S)         | partition_by=k on every stateful op      |
 | GROUP BY/HAVING/ORDER/LIMIT     | groupBy/filter/orderBy/limit/offset      |
 
@@ -694,6 +694,8 @@ class SqlApp:
                 )
             else:
                 df, order_col = self._compile_pattern(src, q.partition_key), None
+            if q.partition_key:
+                df = self._with_key_spellings(df, src, q.partition_key)
             # qualify pattern references in scalar expressions
             for name, alias in self.pattern_column_rewrites(src):
                 pat = re.compile(rf"\b{name}\.([A-Za-z_][A-Za-z0-9_]*)")
@@ -1184,7 +1186,7 @@ class SqlApp:
             else F.lit(True)
         )
         payload = [c for c in base.columns if c != ts_col]
-        out = NFA.logical_and_stream_payload(
+        return NFA.logical_and_stream_payload(
             base,
             ts_col,
             partition_key,
@@ -1194,12 +1196,6 @@ class SqlApp:
             aliases=(g.first.alias, g.second.alias),
             payload_cols=[c for c in payload if c != partition_key],
         )
-        # the relational path exposes the key under BOTH aliases; surface
-        # it under each so SELECT can reference either
-        out = out.withColumn(
-            f"{g.first.alias}_{partition_key}", F.col(partition_key)
-        ).withColumn(f"{g.second.alias}_{partition_key}", F.col(partition_key))
-        return out
 
     # ------------------------------------------------------------------
     def _compile_count_pattern_streaming(
@@ -1497,8 +1493,6 @@ class SqlApp:
         first-match rank (PATTERN mode skip-till-next-match); AND/OR groups
         via the logical operators. Aliased columns surface as
         ``<alias>.<col>`` → ``<alias>_<col>`` (rewritten in SELECT)."""
-        from engine_spark.operators import pattern as PT
-
         steps = src.steps
         within = src.within_seconds
 
@@ -1643,9 +1637,8 @@ class SqlApp:
                 # `prefix -> NOT B FOR d` (reference AbsentStreamStateElement,
                 # converter.rs:1687-1727): anti-join the partial matches
                 # against absent-stream events in the window — the timer
-                # wheel becomes a time-range predicate, like the relational
-                # `pattern.absent` operator. Mid-chain, the window opens
-                # after any prior absent windows (wait_offset).
+                # wheel becomes a time-range predicate. Mid-chain, the
+                # window opens after any prior absent windows (wait_offset).
                 if src.mode == "sequence" and step_idx != len(steps) - 1:
                     raise ValueError(
                         "NOT ... FOR mid-chain in SEQUENCE mode is not "
@@ -1797,7 +1790,6 @@ class SqlApp:
                 .filter(F.col("_rn") == 1)
                 .drop("_rn")
             )
-        del PT
         return cur.drop("_pm_uid")
 
     def _hop_group(
@@ -1970,6 +1962,34 @@ class SqlApp:
                 F.col(_prev_key_col(j.columns, partition_key)) == F.col("_b_key")
             )
         return j.join(betweens, bcond, "left_anti")
+
+    def _with_key_spellings(
+        self, df: DataFrame, src: P.PatternSource, key: str
+    ) -> DataFrame:
+        """Give a partitioned pattern output its key under both spellings:
+        bare ``key`` and ``{alias}_{key}`` for every captured alias. The
+        live kernels keep the key bare and the batch chain prefixes every
+        column, so without this one app text could not select the key on
+        both paths (and a bare ``user`` would silently resolve to Spark's
+        ``user()`` function in batch). The bare key coalesces the aliased
+        ones: an OR branch that did not fire leaves its columns null."""
+        aliases = list(
+            dict.fromkeys(a for _, a in self.pattern_column_rewrites(src))
+        )
+        if key not in df.columns:
+            present = [
+                F.col(f"{a}_{key}") for a in aliases if f"{a}_{key}" in df.columns
+            ]
+            if not present:
+                return df
+            df = df.withColumn(key, F.coalesce(*present))
+        return df.withColumns(
+            {
+                f"{a}_{key}": F.col(key)
+                for a in aliases
+                if f"{a}_{key}" not in df.columns
+            }
+        )
 
     @staticmethod
     def pattern_column_rewrites(src: P.PatternSource) -> list[tuple[str, str]]:

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine_spark.catalog import Catalog
-from engine_spark.operators import pattern, windows
+from engine_spark.operators import windows
 from engine_spark.operators.aggregations import decimal_avg, decimal_sum, stddev_pop_det
 from engine_spark.registry import QUERIES, QueryDef, SparkQuery, register  # noqa: F401
 
@@ -759,8 +759,39 @@ def q_frequent_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# 2f. CEP patterns (batch formulations; streaming NFA in streaming/)
+# 2f. CEP patterns: EventFlux SQL run by SqlApp's batch chain (the live
+# path compiles the same text to the streaming NFA in streaming/)
 # ===========================================================================
+
+def _sql_query(app_sql: str, out_name: str, streams: dict[str, str | None]):
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from engine_spark.plans import SqlApp
+
+        cat = Catalog(spark, sf_dir)
+        app = SqlApp(spark)
+        for t, tscol in streams.items():
+            app.register_stream(t, cat[t], ts_col=tscol)
+        return app.sql(app_sql)[out_name]
+
+    return run
+
+
+def _events_pattern(select: str, pattern: str):
+    """``SELECT <select> FROM <pattern>`` over the ``events`` stream keyed on
+    user_id, as a SqlApp query returning output ``Out``."""
+    return _sql_query(
+        f"PARTITION WITH (user_id OF events) BEGIN "
+        f"INSERT INTO Out SELECT {select} FROM {pattern}; END;",
+        "Out",
+        {"events": "ts"},
+    )
+
+
+_SIGNUP_PURCHASE = (
+    "(e1=events[event_type = 'signup'] -> e2=events[event_type = 'purchase']) "
+    "WITHIN 1800 SECONDS"
+)
+
 
 @register(
     "pattern_followed_by",
@@ -785,24 +816,18 @@ def q_frequent_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(every_state_element.rs — EVERY restarts, absence of EVERY stops)",
 )
 def q_pattern_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = Catalog(spark, sf_dir)["events"]
-    m = pattern.followed_by(
-        ev,
-        "ts",
-        ["user_id"],
-        first=F.col("event_type") == "signup",
-        second=F.col("event_type") == "purchase",
-        within_seconds=1800,
-    )
-    firsts = pattern.first_match_only(m, ["user_id"], "e1_ts").select(
-        "user_id", F.col("e1_event_id").alias("signup_id"), F.lit(True).alias("is_first")
-    )
-    out = m.select(
-        "user_id",
-        F.col("e1_event_id").alias("signup_id"),
-        F.col("e2_event_id").alias("purchase_id"),
-        "delay_seconds",
-    ).join(firsts, ["user_id", "signup_id"], "left")
+    matches = _events_pattern(
+        "user_id, e1.event_id AS signup_id, e2.event_id AS purchase_id, "
+        "CAST(unix_micros(CAST(e2.ts AS TIMESTAMP)) "
+        "- unix_micros(CAST(e1.ts AS TIMESTAMP)) AS DOUBLE) / 1000000 "
+        "AS delay_seconds",
+        f"EVERY PATTERN {_SIGNUP_PURCHASE}",
+    )(spark, sf_dir)
+    firsts = _events_pattern(
+        "user_id, e1.event_id AS signup_id, true AS is_first",
+        f"PATTERN {_SIGNUP_PURCHASE}",
+    )(spark, sf_dir)
+    out = matches.join(firsts, ["user_id", "signup_id"], "left")
     return out.select(
         "user_id", "signup_id", "purchase_id", "delay_seconds",
         F.coalesce("is_first", F.lit(False)).alias("is_first"),
@@ -825,16 +850,11 @@ def q_pattern_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(reference absent_stream_state_element.rs + timer wheel)",
 )
 def q_pattern_absent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = Catalog(spark, sf_dir)["events"]
-    m = pattern.absent(
-        ev,
-        "ts",
-        ["user_id"],
-        first=F.col("event_type") == "signup",
-        absent_filter=F.col("event_type") == "purchase",
-        within_seconds=1800,
-    )
-    return m.select("user_id", "event_id", "ts")
+    return _events_pattern(
+        "user_id, e1.event_id AS event_id, e1.ts AS ts",
+        "EVERY PATTERN (e1=events[event_type = 'signup'] "
+        "-> NOT events[event_type = 'purchase'] FOR 1800 SECONDS)",
+    )(spark, sf_dir)
 
 
 @register(
@@ -861,35 +881,19 @@ def q_pattern_absent(spark: SparkSession, sf_dir: str) -> DataFrame:
     "error with firing-branch tag (filter-only, no shuffle)",
 )
 def q_pattern_logical_and(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = Catalog(spark, sf_dir)["events"]
-    m = pattern.logical_and(
-        ev,
-        "ts",
-        ["user_id"],
-        first=F.col("event_type") == "signup",
-        second=F.col("event_type") == "error",
-        within_seconds=900,
-    )
-    and_rows = m.select(
-        F.lit("and").alias("branch"),
-        "user_id",
-        F.col("e1_event_id").alias("a_event_id"),
-        F.col("e2_event_id").alias("b_event_id"),
-        "matched_at",
-    )
-    o = pattern.logical_or(
-        ev,
-        ["user_id"],
-        first=F.col("event_type") == "signup",
-        second=F.col("event_type") == "error",
-    )
-    or_rows = o.select(
-        F.concat(F.lit("or_"), F.col("branch")).alias("branch"),
-        "user_id",
-        F.col("event_id").alias("a_event_id"),
-        F.lit(None).cast("bigint").alias("b_event_id"),
-        F.col("ts").alias("matched_at"),
-    )
+    group = "(e1=events[event_type = 'signup'] {} e2=events[event_type = 'error'])"
+    and_rows = _events_pattern(
+        "'and' AS branch, user_id, e1.event_id AS a_event_id, "
+        "e2.event_id AS b_event_id, _match_ts AS matched_at",
+        f"EVERY PATTERN {group.format('AND')} WITHIN 900 SECONDS",
+    )(spark, sf_dir)
+    # the branch that fired is the alias whose columns are non-null
+    or_rows = _events_pattern(
+        "CASE WHEN e1.event_id IS NOT NULL THEN 'or_first' ELSE 'or_second' "
+        "END AS branch, user_id, coalesce(e1.event_id, e2.event_id) AS a_event_id, "
+        "CAST(NULL AS BIGINT) AS b_event_id, _match_ts AS matched_at",
+        f"EVERY PATTERN {group.format('OR')}",
+    )(spark, sf_dir)
     return and_rows.unionByName(or_rows)
 
 
@@ -916,35 +920,18 @@ def q_pattern_logical_and(spark: SparkSession, sf_dir: str) -> DataFrame:
     "processor.rs) + the {3,5} bound flag (converter.rs:1608-1645) + "
     "collection aggregators count/sum/avg/min/max over the match set "
     "(collection_aggregation_executor.rs:1-30) — one consolidated §2f gate; "
-    "decimal window sums keep doubles order-independent. The standalone "
-    "count_quantifier / count_quantifier_bounded operators are pytest-proven",
+    "decimal window sums keep doubles order-independent. The {m} / {m,n} "
+    "forms run through the same SqlApp count path in tests/test_sql.py",
 )
 def q_pattern_count_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = Catalog(spark, sf_dir)["events"]
-    m = pattern.collection_aggregates(
-        ev,
-        "ts",
-        ["user_id"],
-        event_filter=F.col("event_type") == "error",
-        within_seconds=86400,
-        aggs={
-            "match_count": F.count(F.lit(1)),
-            "sum_dec": F.sum(F.col("value").cast("decimal(18,4)")),
-            "min_value": F.min("value"),
-            "max_value": F.max("value"),
-        },
-    )
-    return m.filter(F.col("match_count") >= 3).select(
-        "event_id",
-        "user_id",
-        "ts",
-        "match_count",
-        F.col("match_count").between(3, 5).alias("in_bounds"),
-        F.col("sum_dec").cast("double").alias("sum_value"),
-        (F.col("sum_dec").cast("double") / F.col("match_count")).alias("avg_value"),
-        "min_value",
-        "max_value",
-    )
+    sum_dec = "CAST(sum(CAST(e1.value AS DECIMAL(18,4))) AS DOUBLE)"
+    return _events_pattern(
+        "e1.event_id AS event_id, user_id, e1.ts AS ts, match_count, "
+        "match_count BETWEEN 3 AND 5 AS in_bounds, "
+        f"{sum_dec} AS sum_value, {sum_dec} / match_count AS avg_value, "
+        "min(e1.value) AS min_value, max(e1.value) AS max_value",
+        "PATTERN (e1=events[event_type = 'error']{3,}) WITHIN 86400 SECONDS",
+    )(spark, sf_dir)
 
 
 # ===========================================================================
@@ -959,19 +946,6 @@ from engine_spark.datapipe import queries as _datapipe_queries  # noqa: E402,F40
 # SQL front-end: the same operators driven through EventFlux-SQL text
 # (engine_spark.plans) — proves parse → compile → execute end-to-end
 # ===========================================================================
-
-def _sql_query(app_sql: str, out_name: str, streams: dict[str, str | None]):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from engine_spark.plans import SqlApp
-
-        cat = Catalog(spark, sf_dir)
-        app = SqlApp(spark)
-        for t, tscol in streams.items():
-            app.register_stream(t, cat[t], ts_col=tscol)
-        return app.sql(app_sql)[out_name]
-
-    return run
-
 
 QUERIES["sql_select_join_group"] = QueryDef(
     spark=_sql_query(
@@ -3218,7 +3192,7 @@ def q_events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cohort_retention(ev: DataFrame, ts_col: str = "ts",
                      key_col: str = "user_id") -> DataFrame:
     """(cohort_day, day_offset, n_active_users) retention matrix — the
-    one-shuffle plan shared by the gate and tools/scaling_probe.py."""
+    one-shuffle plan behind the ``events_cohort_retention`` gate."""
     # NULL-ts events are not activity — filtered EXPLICITLY on both sides
     # (collect_set would drop NULL days silently on the Spark side only,
     # diverging from the oracle's GROUP BY which keeps a NULL-day row)
@@ -3287,7 +3261,7 @@ def funnel_stages(ev: DataFrame, ts_col: str = "ts",
                   key_col: str = "user_id",
                   type_col: str = "event_type") -> DataFrame:
     """(stage, n_users, sum_delay_us) conversion funnel — the
-    one-exchange plan shared by the gate and tools/scaling_probe.py."""
+    one-exchange plan behind the funnel gate."""
     from pyspark.sql import Window as W
 
     ev = ev.select(
@@ -3601,8 +3575,7 @@ _ORDER = [
     # asof_join_last_view, join_q3_shipping_priority — rationale
     # unchanged from the round-6/7 notes. ALL remain fully oracle-checked
     # on every run of tools/check_correctness.py (CORRECTNESS_LOCAL.json,
-    # regenerated in lockstep) and stay in bench.py's headline set where
-    # listed.
+    # regenerated in lockstep).
     "bpe_token_counts",           # rotated out r9 follow-up (driver-green r7+r8; text_quality reps tokenization, BPE stays pytest+LOCAL-proven)
     "multimodal_y4m",             # rotated out r9 follow-up (driver-green r8; jpeg/video_frames/tiff rep codecs)
     "window_session_30m",         # rotated out r9 follow-up (driver-green r2-r8)

@@ -546,8 +546,9 @@ def count_quantifier_stream(
     """Streaming `e1=A{m,}` / `A{m,n}` WITHIN d (reference
     count_pre_state_processor.rs): an event fires when the trailing-d count
     of qualifying events on its key is in ``[m, n]`` — the exact semantics
-    of the batch ``pattern.count_quantifier_bounded`` range frame, held as
-    a per-key timestamp buffer whose size the horizon bounds.
+    of the trailing range frame SqlApp's batch count path
+    (``SqlApp._compile_count_pattern``) computes, held as a per-key
+    timestamp buffer whose size the horizon bounds.
 
     ``payload_cols`` carries arbitrary event columns through to the output
     (types preserved from the input schema — what the SQL routing needs);
@@ -702,7 +703,8 @@ def logical_and_stream_payload(
     """`e1=A AND e2=B` over a live stream with FULL payload capture
     (reference logical_pre_state_processor.rs AND mode): every (A, B) pair
     on the key with ``|tA − tB| ≤ d`` fires at the later of the two — the
-    pair set of the batch ``pattern.logical_and`` join.
+    pair set of the AND-group join in SqlApp's batch chain
+    (``SqlApp._compile_pattern``).
 
     Output: key + ``{a1}_{ts_col}``/``{a1}_{col}…`` + ``{a2}_…`` +
     ``_match_ts`` — the same column names the relational first-step group

@@ -64,6 +64,19 @@ def followed_by_chain(
     )
 
 
+def run_pattern(df, query, key="user"):
+    """``PARTITION WITH (key OF S) BEGIN INSERT INTO Out <query>; END;`` run
+    by SqlApp over ``df`` as stream ``S`` (event time ``ts``); returns the
+    ``Out`` frame."""
+    from engine_spark.plans import SqlApp
+
+    app = SqlApp(df.sparkSession)
+    app.register_stream("S", df, ts_col="ts")
+    return app.sql(
+        f"PARTITION WITH ({key} OF S) BEGIN INSERT INTO Out {query}; END;"
+    )["Out"]
+
+
 def absent_chain(
     df, ts_col, key_col, first, absent, within_seconds, value_col, salt=None
 ):

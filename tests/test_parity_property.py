@@ -1,7 +1,7 @@
 """Property-based batch ↔ streaming parity for the CEP core.
 
-The batch `pattern.followed_by` (relational join+rank) and the streaming
-`nfa.chain_stream` (per-key state machine) implement the SAME
+The batch chain SqlApp compiles PATTERN to (relational join+rank per hop)
+and the streaming `nfa.chain_stream` (per-key state machine) implement the SAME
 semantics by two completely different mechanisms. On any event sequence
 they must produce identical match sets — a far stronger statement than
 example-based tests, and the property the reference enforces implicitly by
@@ -33,12 +33,30 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from engine_spark.operators import pattern
+from engine_spark.plans import SqlApp
 from engine_spark.streaming import nfa
 from engine_spark.streaming.harness import StreamRunner
-from tests.conftest import absent_chain, followed_by_chain
+from tests.conftest import absent_chain, followed_by_chain, run_pattern
 
 T0 = datetime(2026, 1, 1, 12, 0)
+
+EVENT_SCHEMA = "ts timestamp, user string, etype string, v double"
+
+
+def _batch_pattern(spark, rows, query, schema=EVENT_SCHEMA):
+    """Batch side: ``query`` run by SqlApp's relational chain over the rows
+    as stream ``S`` keyed on ``user``; returns the collected output."""
+    return run_pattern(spark.createDataFrame(rows, schema), query).collect()
+
+
+FOLLOWED_BY = (
+    "SELECT user, e1.v AS e1_v, e2.v AS e2_v FROM EVERY PATTERN "
+    "(e1=S[etype = 'login'] -> e2=S[etype = 'purchase']) WITHIN {} SECONDS"
+)
+ABSENT = (
+    "SELECT user, e1.v AS v FROM EVERY PATTERN "
+    "(e1=S[etype = 'login'] -> NOT S[etype = 'purchase'] FOR {} SECONDS)"
+)
 
 events_strategy = st.lists(
     st.tuples(
@@ -69,17 +87,10 @@ def test_followed_by_batch_equals_streaming(spark, events, split):
         key=lambda r: r[0],
     )
 
-    # --- batch: relational formulation ---------------------------------
-    df = spark.createDataFrame(rows, "ts timestamp, user string, etype string, v double")
-    batch = pattern.followed_by(
-        df, "ts", ["user"],
-        first=F.col("etype") == "login",
-        second=F.col("etype") == "purchase",
-        within_seconds=within,
-    )
+    # --- batch: SqlApp's relational chain ------------------------------
     batch_set = {
         (r["user"], r["e1_v"], r["e2_v"])
-        for r in batch.select("user", "e1_v", "e2_v").collect()
+        for r in _batch_pattern(spark, rows, FOLLOWED_BY.format(within))
     }
 
     # --- streaming: per-key NFA across micro-batches -------------------
@@ -186,8 +197,6 @@ def test_absent_batch_equals_streaming(spark, events):
     """Relational absent (anti-join) == streaming absent (state timeout):
     a far-future sentinel pushes the watermark past every deadline so the
     streaming side fully resolves."""
-    from engine_spark.operators import pattern as PT
-
     within = 600
     rows_ = sorted(
         [
@@ -196,14 +205,10 @@ def test_absent_batch_equals_streaming(spark, events):
         ],
         key=lambda r: r[0],
     )
-    df = spark.createDataFrame(rows_, "ts timestamp, user string, etype string, v double")
-    batch = PT.absent(
-        df, "ts", ["user"],
-        first=F.col("etype") == "login",
-        absent_filter=F.col("etype") == "purchase",
-        within_seconds=within,
-    )
-    batch_set = {(r["user"], r["v"]) for r in batch.select("user", "v").collect()}
+    batch_set = {
+        (r["user"], r["v"])
+        for r in _batch_pattern(spark, rows_, ABSENT.format(within))
+    }
 
     r = StreamRunner(spark, "ts timestamp, user string, etype string, v double")
     r.send(
@@ -237,7 +242,6 @@ def test_absent_batch_equals_streaming(spark, events):
 def test_chain3_batch_equals_streaming(spark, events, split):
     """3-step chain: the relational SQL PATTERN compiler and the streaming
     chain_stream NFA must produce identical match sets."""
-    from engine_spark.plans import SqlApp
     from engine_spark.plans.compiler import _Stream
 
     within = 600
@@ -248,9 +252,6 @@ def test_chain3_batch_equals_streaming(spark, events, split):
         ],
         key=lambda r: r[0],
     )
-    # NB: `e1.user`, not bare `user` — the pattern output has only aliased
-    # `e1_user`-style columns, and Spark resolves a bare `user` to the
-    # niladic current_user() function instead of erroring
     sql = (
         "PARTITION WITH (user OF E) BEGIN "
         "INSERT INTO Out SELECT e1.user AS u, e1.v AS v1, e2.v AS v2, e3.v AS v3 "
@@ -318,12 +319,15 @@ def test_count_quantifier_batch_equals_streaming(spark, events, split):
         ],
         key=lambda r: r[0],
     )
-    df = spark.createDataFrame(rows, "ts timestamp, user string, v double")
-    batch = pattern.count_quantifier_bounded(
-        df, "ts", ["user"], F.lit(True), 2, 4, within
+    batch = _batch_pattern(
+        spark,
+        rows,
+        "SELECT user, e1.ts AS ts, match_count, e1.v AS v "
+        f"FROM PATTERN (e1=S{{2,4}}) WITHIN {within} SECONDS",
+        schema="ts timestamp, user string, v double",
     )
     batch_set = {
-        (r["user"], str(r["ts"]), r["match_count"], r["v"]) for r in batch.collect()
+        (r["user"], str(r["ts"]), r["match_count"], r["v"]) for r in batch
     }
 
     r = StreamRunner(spark, "ts timestamp, user string, v double")
@@ -507,7 +511,6 @@ def test_midchain_quantifier_ties_batch_equals_streaming(spark, events, split):
     capture is identical whichever tied event ranks m-th; A/C events get
     unique per-event second offsets, keeping every cross-step comparison
     strict and unambiguous in both engines."""
-    from engine_spark.plans import SqlApp
     from engine_spark.plans.compiler import _Stream
 
     sql = (
@@ -585,7 +588,6 @@ def test_midchain_and_group_batch_equals_streaming(spark, events, split):
     """`A -> (B AND C)`: the relational chain (join + first-completing-pair
     rank) and the streaming NFA (group step holding first match per member)
     must produce identical match sets on any totally-ordered schedule."""
-    from engine_spark.plans import SqlApp
     from engine_spark.plans.compiler import _Stream
     from engine_spark.streaming.harness import StreamRunner
 
@@ -685,16 +687,9 @@ def _tie_rows(events):
 def test_followed_by_ties_batch_equals_streaming(spark, events, split):
     within = 120
     rows = _tie_rows(events)
-    df = spark.createDataFrame(rows, "ts timestamp, user string, etype string, v double")
-    batch = pattern.followed_by(
-        df, "ts", ["user"],
-        first=F.col("etype") == "login",
-        second=F.col("etype") == "purchase",
-        within_seconds=within,
-    )
     batch_set = {
         (r["user"], r["e1_v"], r["e2_v"])
-        for r in batch.select("user", "e1_v", "e2_v").collect()
+        for r in _batch_pattern(spark, rows, FOLLOWED_BY.format(within))
     }
 
     r = StreamRunner(spark, "ts timestamp, user string, etype string, v double")
@@ -725,19 +720,11 @@ def test_followed_by_ties_batch_equals_streaming(spark, events, split):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 def test_absent_ties_batch_equals_streaming(spark, events):
-    from engine_spark.operators import pattern as PT
-
     within = 120
     rows = _tie_rows(events)
-    df = spark.createDataFrame(rows, "ts timestamp, user string, etype string, v double")
-    batch = PT.absent(
-        df, "ts", ["user"],
-        first=F.col("etype") == "login",
-        absent_filter=F.col("etype") == "purchase",
-        within_seconds=within,
-    )
     batch_set = sorted(
-        (r["user"], r["v"]) for r in batch.select("user", "v").collect()
+        (r["user"], r["v"])
+        for r in _batch_pattern(spark, rows, ABSENT.format(within))
     )
 
     r = StreamRunner(spark, "ts timestamp, user string, etype string, v double")
@@ -768,7 +755,6 @@ def test_absent_ties_batch_equals_streaming(spark, events):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 def test_chain3_ties_batch_equals_streaming(spark, events, split):
-    from engine_spark.plans import SqlApp
     from engine_spark.plans.compiler import _Stream
 
     within = 300
@@ -832,7 +818,6 @@ def test_group_ties_batch_equals_streaming(spark, events, split, connective):
     """`A -> (B AND C)` and `A -> (B OR C)` on tie-heavy schedules. For OR
     the firing member is engine-specific on a tie, so the projection takes
     coalesce(e2.v, e3.v) — member-agnostic, well-defined either way."""
-    from engine_spark.plans import SqlApp
     from engine_spark.plans.compiler import _Stream
 
     within = 300

@@ -1,4 +1,5 @@
-"""CEP pattern tests — exact match sets, including the duplicate-timestamp
+"""CEP pattern tests — exact match sets through the relational chain
+``SqlApp`` compiles PATTERN/SEQUENCE to, including the duplicate-timestamp
 edge (two A events with identical key+ts must each keep their own match;
 reference stream_pre_state_processor.rs spawns one NFA state per event).
 """
@@ -7,8 +8,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from engine_spark.operators import pattern
-from tests.conftest import rows, ts
+from tests.conftest import rows, ts, run_pattern as run
+
+#: ``delay_seconds`` of a matched pair in exact integer microseconds;
+#: ``unix_micros`` rejects TIMESTAMP_NTZ, hence the cast
+DELAY = (
+    "CAST(unix_micros(CAST(e2.ts AS TIMESTAMP)) - "
+    "unix_micros(CAST(e1.ts AS TIMESTAMP)) AS DOUBLE) / 1000000 AS delay_seconds"
+)
 
 
 def ev(spark, data):
@@ -26,17 +33,17 @@ BASE = [
     ("u2", "view", ts(30), 6),  # outside WITHIN for followed_by tests
 ]
 
+LOGIN_PURCHASE = "(e1=S[etype = 'login'] -> e2=S[etype = 'purchase'])"
+
 
 def test_followed_by_first_match(spark):
-    out = pattern.followed_by(
-        ev(spark, BASE), "ts", ["user"],
-        first=F.col("etype") == "login",
-        second=F.col("etype") == "purchase",
-        within_seconds=600,
+    out = run(
+        ev(spark, BASE),
+        f"SELECT user, e1.eid AS e1_eid, e2.eid AS e2_eid, {DELAY} "
+        f"FROM EVERY PATTERN {LOGIN_PURCHASE} WITHIN 600 SECONDS",
     )
-    got = rows(out, "user", "e1_eid", "e2_eid", "delay_seconds")
     # u1 login→ earliest purchase (eid 3, 120 s later); u2 has none
-    assert got == [("u1", 1, 3, 120.0)]
+    assert rows(out) == [("u1", 1, 3, 120.0)]
 
 
 def test_followed_by_duplicate_timestamp_keeps_both(spark):
@@ -45,46 +52,41 @@ def test_followed_by_duplicate_timestamp_keeps_both(spark):
         ("u1", "login", ts(0), 2),  # same key, same ts, distinct event
         ("u1", "purchase", ts(1), 3),
     ]
-    out = pattern.followed_by(
-        ev(spark, data), "ts", ["user"],
-        first=F.col("etype") == "login",
-        second=F.col("etype") == "purchase",
-        within_seconds=600,
+    out = run(
+        ev(spark, data),
+        "SELECT e1.eid AS e1_eid, e2.eid AS e2_eid "
+        f"FROM EVERY PATTERN {LOGIN_PURCHASE} WITHIN 600 SECONDS",
     )
-    got = rows(out, "e1_eid", "e2_eid")
-    assert got == [(1, 3), (2, 3)]
+    assert rows(out) == [(1, 3), (2, 3)]
 
 
 def test_sequence_strict_adjacency(spark):
-    out = pattern.followed_by(
-        ev(spark, BASE), "ts", ["user"],
-        first=F.col("etype") == "login",
-        second=F.col("etype") == "purchase",
-        within_seconds=600,
-        strict=True,
+    df = ev(spark, BASE)
+    out = run(
+        df,
+        "SELECT e1.eid AS e1_eid "
+        f"FROM EVERY SEQUENCE {LOGIN_PURCHASE} WITHIN 600 SECONDS",
     )
     # u1: login(1) → view(2) intervenes before purchase(3) ⇒ no strict match
-    assert rows(out, "e1_eid") == []
+    assert rows(out) == []
 
-    out2 = pattern.followed_by(
-        ev(spark, BASE), "ts", ["user"],
-        first=F.col("etype") == "view",
-        second=F.col("etype") == "purchase",
-        within_seconds=600,
-        strict=True,
+    out2 = run(
+        df,
+        "SELECT e1.eid AS e1_eid, e2.eid AS e2_eid "
+        "FROM EVERY SEQUENCE (e1=S[etype = 'view'] -> e2=S[etype = 'purchase']) "
+        "WITHIN 600 SECONDS",
     )
-    assert rows(out2, "e1_eid", "e2_eid") == [(2, 3)]
+    assert rows(out2) == [(2, 3)]
 
 
 def test_absent_pattern(spark):
-    out = pattern.absent(
-        ev(spark, BASE), "ts", ["user"],
-        first=F.col("etype") == "login",
-        absent_filter=F.col("etype") == "purchase",
-        within_seconds=600,
+    out = run(
+        ev(spark, BASE),
+        "SELECT user, e1.eid AS eid FROM EVERY PATTERN "
+        "(e1=S[etype = 'login'] -> NOT S[etype = 'purchase'] FOR 600 SECONDS)",
     )
     # u1's login sees a purchase within 10 min; u2's does not
-    assert rows(out, "user", "eid") == [("u2", 5)]
+    assert rows(out) == [("u2", 5)]
 
 
 def test_count_quantifier_min(spark):
@@ -94,14 +96,23 @@ def test_count_quantifier_min(spark):
         ("u1", "error", ts(2), 3),
         ("u2", "error", ts(0), 4),
     ]
-    out = pattern.count_quantifier(
-        ev(spark, data), "ts", ["user"],
-        event_filter=F.col("etype") == "error",
-        min_count=3,
-        within_seconds=600,
+    out = run(
+        ev(spark, data),
+        "SELECT user, e1.eid AS eid, match_count "
+        "FROM PATTERN (e1=S[etype = 'error']{3,}) WITHIN 600 SECONDS",
     )
-    got = rows(out, "user", "eid", "match_count")
-    assert got == [("u1", 3, 3)]
+    assert rows(out) == [("u1", 3, 3)]
+
+
+def test_count_quantifier_bounded_max(spark):
+    data = [("u1", "error", ts(i), i) for i in range(7)]  # 7 errors in 6 min
+    out = run(
+        ev(spark, data),
+        "SELECT e1.eid AS eid, match_count "
+        "FROM PATTERN (e1=S[etype = 'error']{3,5}) WITHIN 600 SECONDS",
+    )
+    # counts run 1..7 over the trailing window; only 3..5 fire
+    assert rows(out) == [(2, 3), (3, 4), (4, 5)]
 
 
 def test_logical_and_either_order(spark):
@@ -113,24 +124,23 @@ def test_logical_and_either_order(spark):
         ("u3", "login", ts(0), 5),
         ("u3", "error", ts(30), 6),  # outside window
     ]
-    out = pattern.logical_and(
-        ev(spark, data), "ts", ["user"],
-        first=F.col("etype") == "login",
-        second=F.col("etype") == "error",
-        within_seconds=600,
+    out = run(
+        ev(spark, data),
+        "SELECT user, e1.eid AS e1_eid, e2.eid AS e2_eid, _match_ts AS matched_at "
+        "FROM EVERY PATTERN (e1=S[etype = 'login'] AND e2=S[etype = 'error']) "
+        "WITHIN 600 SECONDS",
     )
-    got = rows(out, "user", "e1_eid", "e2_eid", "matched_at")
-    assert got == [("u1", 1, 2, ts(5)), ("u2", 4, 3, ts(5))]
+    assert rows(out) == [("u1", 1, 2, ts(5)), ("u2", 4, 3, ts(5))]
 
 
 def test_logical_or_branch_tag(spark):
-    out = pattern.logical_or(
-        ev(spark, BASE), ["user"],
-        first=F.col("etype") == "login",
-        second=F.col("etype") == "view",
+    out = run(
+        ev(spark, BASE),
+        "SELECT coalesce(e1.eid, e2.eid) AS eid, "
+        "CASE WHEN e1.eid IS NOT NULL THEN 'first' ELSE 'second' END AS branch "
+        "FROM EVERY PATTERN (e1=S[etype = 'login'] OR e2=S[etype = 'view'])",
     )
-    got = rows(out, "eid", "branch")
-    assert got == [(1, "first"), (2, "second"), (5, "first"), (6, "second")]
+    assert rows(out) == [(1, "first"), (2, "second"), (5, "first"), (6, "second")]
 
 
 def test_first_match_only_non_every(spark):
@@ -140,28 +150,12 @@ def test_first_match_only_non_every(spark):
         ("u1", "login", ts(2), 3),
         ("u1", "purchase", ts(3), 4),
     ]
-    m = pattern.followed_by(
-        ev(spark, data), "ts", ["user"],
-        first=F.col("etype") == "login",
-        second=F.col("etype") == "purchase",
-        within_seconds=600,
-    )
-    assert len(rows(m, "e1_eid")) == 2  # EVERY semantics: both logins match
-    one = pattern.first_match_only(m, ["user"], "e1_ts")
-    assert rows(one, "e1_eid", "e2_eid") == [(1, 2)]  # non-EVERY: first only
-
-
-def test_count_quantifier_bounded_max(spark):
-    data = [("u1", "error", ts(i), i) for i in range(7)]  # 7 errors in 6 min
-    out = pattern.count_quantifier_bounded(
-        ev(spark, data), "ts", ["user"],
-        event_filter=F.col("etype") == "error",
-        min_count=3, max_count=5,
-        within_seconds=600,
-    )
-    got = rows(out, "eid", "match_count")
-    # counts run 1..7 over the trailing window; only 3..5 fire
-    assert got == [(2, 3), (3, 4), (4, 5)]
+    df = ev(spark, data)
+    select = "SELECT e1.eid AS e1_eid, e2.eid AS e2_eid FROM"
+    every = run(df, f"{select} EVERY PATTERN {LOGIN_PURCHASE} WITHIN 600 SECONDS")
+    assert len(rows(every)) == 2  # EVERY semantics: both logins match
+    one = run(df, f"{select} PATTERN {LOGIN_PURCHASE} WITHIN 600 SECONDS")
+    assert rows(one) == [(1, 2)]  # non-EVERY: first only
 
 
 def test_collection_aggregates_over_match_set(spark):
@@ -171,51 +165,20 @@ def test_collection_aggregates_over_match_set(spark):
         ("u1", "error", ts(2), 3),
     ]
     df = ev(spark, data).withColumn("value", F.col("eid").cast("double") * 10)
-    out = pattern.collection_aggregates(
-        df, "ts", ["user"],
-        event_filter=F.col("etype") == "error",
-        within_seconds=600,
-        aggs={
-            "n": F.count(F.lit(1)),
-            "s": F.sum("value"),
-            "mx": F.max("value"),
-        },
+    out = run(
+        df,
+        "SELECT e1.eid AS eid, match_count AS n, sum(e1.value) AS s, "
+        "max(e1.value) AS mx "
+        "FROM PATTERN (e1=S[etype = 'error']{1,}) WITHIN 600 SECONDS",
     )
-    got = rows(out, "eid", "n", "s", "mx")
-    assert got == [(1, 1, 10.0, 10.0), (2, 2, 30.0, 20.0), (3, 3, 60.0, 30.0)]
-
-
-def test_followed_by_duplicate_a_rows_collapse(spark):
-    """Byte-identical duplicate A events yield ONE match in both PATTERN and
-    SEQUENCE modes (relational set semantics, matching the SQL oracle);
-    per-event duplicate semantics live in the streaming NFA."""
-    from tests.conftest import ts
-
-    df = spark.createDataFrame(
-        [
-            (1, ts(0), "a", 1.0),
-            (1, ts(0), "a", 1.0),  # exact duplicate (at-least-once upstream)
-            (1, ts(1), "b", 2.0),
-        ],
-        "user_id long, ts timestamp, kind string, value double",
-    )
-    for strict in (False, True):
-        out = pattern.followed_by(
-            df, "ts", ["user_id"],
-            F.col("kind") == "a", F.col("kind") == "b",
-            within_seconds=600, strict=strict,
-        ).collect()
-        assert len(out) == 1, f"strict={strict}: {out}"
-        assert out[0]["e1_value"] == 1.0 and out[0]["e2_value"] == 2.0
+    assert rows(out) == [(1, 1, 10.0, 10.0), (2, 2, 30.0, 20.0), (3, 3, 60.0, 30.0)]
 
 
 def test_followed_by_dedupe_false_keeps_per_event_duplicates(spark):
-    """``dedupe=False`` opts into the reference's per-arriving-event
-    semantics (stream_pre_state_processor.rs: every duplicate A opens its
-    own state and fires its own match) — batch then agrees with the
-    streaming NFA on at-least-once duplicate input."""
-    from tests.conftest import ts
-
+    """Byte-identical duplicate A events each fire their own match: the
+    reference's per-arriving-event semantics (stream_pre_state_processor.rs:
+    every duplicate A opens its own state), which the streaming NFA shares,
+    so batch and stream agree on at-least-once duplicate input."""
     df = spark.createDataFrame(
         [
             (1, ts(0), "a", 1.0),
@@ -224,10 +187,12 @@ def test_followed_by_dedupe_false_keeps_per_event_duplicates(spark):
         ],
         "user_id long, ts timestamp, kind string, value double",
     )
-    out = pattern.followed_by(
-        df, "ts", ["user_id"],
-        F.col("kind") == "a", F.col("kind") == "b",
-        within_seconds=600, dedupe=False,
+    out = run(
+        df,
+        "SELECT e1.value AS e1_value, e2.value AS e2_value "
+        "FROM EVERY PATTERN (e1=S[kind = 'a'] -> e2=S[kind = 'b']) "
+        "WITHIN 600 SECONDS",
+        key="user_id",
     ).collect()
     assert len(out) == 2
     assert all(r["e1_value"] == 1.0 and r["e2_value"] == 2.0 for r in out)

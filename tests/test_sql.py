@@ -217,6 +217,35 @@ def test_pattern_with_filter_and_within(spark):
     assert [tuple(r) for r in outs["Out"].collect()] == [(1, 2)]
 
 
+def test_pattern_partition_key_both_spellings(spark):
+    """Under PARTITION WITH a pattern output carries its key bare and as
+    ``<alias>.<key>``, the spellings the live path accepts too. A bare
+    ``user`` reads the key column, not Spark's niladic user() function."""
+    app = SqlApp(spark)
+    t0 = datetime(2026, 1, 1, 12, 0)
+    app.register_stream(
+        "E",
+        spark.createDataFrame(
+            [
+                ("u1", "login", t0, 1),
+                ("u2", "login", t0 + timedelta(seconds=5), 2),
+                ("u1", "purchase", t0 + timedelta(seconds=10), 3),
+                ("u2", "purchase", t0 + timedelta(seconds=20), 4),
+            ],
+            "user string, etype string, ts timestamp, eid int",
+        ),
+        ts_col="ts",
+    )
+    outs = app.sql(
+        "PARTITION WITH (user OF E) BEGIN "
+        "INSERT INTO Out SELECT user, e1.user AS k1, e2.user AS k2, "
+        "e1.eid AS a, e2.eid AS b "
+        "FROM EVERY PATTERN (e1=E[etype = 'login'] -> e2=E[etype = 'purchase']) "
+        "WITHIN 60 SECONDS; END;"
+    )
+    assert rows(outs["Out"]) == [("u1", "u1", "u1", 1, 3), ("u2", "u2", "u2", 2, 4)]
+
+
 def test_window_length_sliding_aggregate(spark):
     app = SqlApp(spark)
     app.register_stream(

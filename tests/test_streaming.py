@@ -408,24 +408,64 @@ def test_logical_and_stream_pairs_both_orders(spark):
 
 def test_logical_or_stream_is_stateless_filter(spark):
     """A OR B on a live stream: either branch completes the state on the
-    event that arrives — the batch ``pattern.logical_or`` operator is
-    stateless (disjunctive filter + branch tag), so it runs unchanged on a
-    streaming DataFrame across micro-batches."""
-    from engine_spark.operators import pattern
+    event that arrives. SqlApp compiles the group to a stateless
+    disjunctive filter (a null-padded union), so it runs unchanged on a
+    streaming DataFrame across micro-batches; the branch is whichever
+    alias is non-null."""
+    from engine_spark.plans import SqlApp
 
     r = StreamRunner(spark, "ts timestamp, user string, etype string, v double")
     r.send([{"ts": _ts(0), "user": "u1", "etype": "a", "v": 1.0}])
     r.send([{"ts": _ts(1), "user": "u1", "etype": "c", "v": 9.0}])  # neither
     r.send([{"ts": _ts(2), "user": "u2", "etype": "b", "v": 2.0}])
-    r.run(
-        lambda df: pattern.logical_or(
-            df, ["user"],
-            first=F.col("etype") == "a",
-            second=F.col("etype") == "b",
-        )
-    )
+
+    def build(sdf):
+        app = SqlApp(spark)
+        app.register_stream("S", sdf, ts_col="ts")
+        return app.sql(
+            "PARTITION WITH (user OF S) BEGIN INSERT INTO Out SELECT user, "
+            "CASE WHEN e1.ts IS NOT NULL THEN 'first' ELSE 'second' END "
+            "AS branch, coalesce(e1.v, e2.v) AS v "
+            "FROM EVERY PATTERN (e1=S[etype = 'a'] OR e2=S[etype = 'b']) "
+            "WITHIN 600 SECONDS; END;"
+        )["Out"]
+
+    r.run(build)
     got = sorted((m["user"], m["branch"], m["v"]) for m in r.shutdown())
     assert got == [("u1", "first", 1.0), ("u2", "second", 2.0)]
+
+
+def test_sql_pattern_live_key_both_spellings(spark):
+    """On a live stream the partition key resolves bare and as
+    ``<alias>.<key>``, the same spellings the batch chain accepts."""
+    from engine_spark.plans import SqlApp
+
+    r = StreamRunner(spark, "ts timestamp, user_id string, etype string, eid int")
+    r.send([
+        {"ts": _ts(0), "user_id": "u1", "etype": "login", "eid": 1},
+        {"ts": _ts(1), "user_id": "u2", "etype": "login", "eid": 2},
+    ])
+    r.send([
+        {"ts": _ts(2), "user_id": "u1", "etype": "purchase", "eid": 3},
+        {"ts": _ts(3), "user_id": "u2", "etype": "purchase", "eid": 4},
+    ])
+
+    def build(sdf):
+        app = SqlApp(spark)
+        app.register_stream("E", sdf, ts_col="ts")
+        return app.sql(
+            "PARTITION WITH (user_id OF E) BEGIN INSERT INTO Out "
+            "SELECT user_id, e1.user_id AS k1, e2.user_id AS k2, "
+            "e1.eid AS a, e2.eid AS b "
+            "FROM EVERY PATTERN (e1=E[etype = 'login'] "
+            "-> e2=E[etype = 'purchase']) WITHIN 600 SECONDS; END;"
+        )["Out"]
+
+    r.run(build)
+    got = sorted(
+        (m["user_id"], m["k1"], m["k2"], m["a"], m["b"]) for m in r.shutdown()
+    )
+    assert got == [("u1", "u1", "u1", 1, 3), ("u2", "u2", "u2", 2, 4)]
 
 
 def test_sql_pattern_three_steps_on_live_stream(spark):

@@ -20,9 +20,9 @@ from engine_spark.functions.timeutils import (
     epoch_seconds,
     epoch_seconds_d,
 )
-from engine_spark.operators import pattern, windows
+from engine_spark.operators import windows
 
-from tests.conftest import rows, ts
+from tests.conftest import rows, run_pattern, ts
 
 TS_TYPES = ("timestamp", "timestamp_ntz")
 
@@ -72,13 +72,16 @@ def test_time_sliding_both_types(spark, ts_type):
 @pytest.mark.parametrize("ts_type", TS_TYPES)
 def test_followed_by_both_types(spark, ts_type):
     df = _events(spark, ts_type)
-    out = pattern.followed_by(
+    # unix_micros rejects TIMESTAMP_NTZ: cast first (exact under UTC)
+    out = run_pattern(
         df,
-        "ts",
-        ["user_id"],
-        F.col("kind") == "a",
-        F.col("kind") == "b",
-        within_seconds=600,
+        "SELECT user_id, e1.value AS e1_value, e2.value AS e2_value, "
+        "CAST(unix_micros(CAST(e2.ts AS TIMESTAMP)) - "
+        "unix_micros(CAST(e1.ts AS TIMESTAMP)) AS DOUBLE) / 1000000 "
+        "AS delay_seconds "
+        "FROM EVERY PATTERN (e1=S[kind = 'a'] -> e2=S[kind = 'b']) "
+        "WITHIN 600 SECONDS",
+        key="user_id",
     )
     got = rows(out, "user_id", "e1_value", "e2_value", "delay_seconds")
     assert (1, 1.0, 3.0, 120.0) in got
@@ -183,8 +186,11 @@ def test_streaming_tumbling_preserves_ts_type(spark, ts_type):
 @pytest.mark.parametrize("ts_type", TS_TYPES)
 def test_count_quantifier_both_types(spark, ts_type):
     df = _events(spark, ts_type)
-    out = pattern.count_quantifier(
-        df, "ts", ["user_id"], F.col("kind") == "a", min_count=2, within_seconds=600
+    out = run_pattern(
+        df,
+        "SELECT user_id, match_count "
+        "FROM PATTERN (e1=S[kind = 'a']{2,}) WITHIN 600 SECONDS",
+        key="user_id",
     )
     got = rows(out, "user_id", "match_count")
     assert got == [(1, 2)]
