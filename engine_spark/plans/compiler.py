@@ -14,6 +14,8 @@ Maps each dialect construct onto the operator library:
 | WINDOW('sort', n, attr, dir…)   | operators.windows.sort_window            |
 | JOIN … ON                       | operators.joins (Catalyst strategy)      |
 | PATTERN / SEQUENCE              | join + first-match rank per hop (below)  |
+| PATTERN (A{m,n}) WITHIN d       | time_sliding; live: sliding_stream time  |
+| PATTERN (A AND B) WITHIN d      | keyed range join (live: stream-stream)   |
 | PARTITION WITH (k OF S)         | partition_by=k on every stateful op      |
 | GROUP BY/HAVING/ORDER/LIMIT     | groupBy/filter/orderBy/limit/offset      |
 
@@ -36,7 +38,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine_spark.functions.timeutils import epoch_seconds, epoch_seconds_d
+from engine_spark.functions.timeutils import as_ts, epoch_seconds_d
 from engine_spark.operators import joins as J
 from engine_spark.operators import windows as W
 from engine_spark.plans import parser as P
@@ -153,6 +155,14 @@ def _prev_key_col(columns: list[str], key: str) -> str:
         if c.endswith(f"_{key}"):
             return c
     raise KeyError(f"partition key {key!r} not found among {columns}")
+
+
+def _pair_within(a_ts: str, b_ts: str, within: float):
+    """An AND pair's WITHIN bound |tA − tB| ≤ d, spelled as the event-time
+    range ``tB BETWEEN tA − d AND tA + d``: the form a stream-stream join
+    turns into watermark eviction of its state."""
+    d = F.expr(f"make_dt_interval(0, 0, 0, {float(within)})")
+    return as_ts(b_ts).between(as_ts(a_ts) - d, as_ts(a_ts) + d)
 
 
 @dataclass
@@ -676,13 +686,7 @@ class SqlApp:
                     )
                 quantified = []  # handled by the chain paths below
             if quantified:
-                if self._pattern_streams_live(src):
-                    df, order_col = (
-                        self._compile_count_pattern_streaming(src, q),
-                        None,
-                    )
-                else:
-                    df, order_col = self._compile_count_pattern(src, q), None
+                df, order_col = self._compile_count_pattern(src, q), None
                 # HAVING agg calls were rewritten to hidden _collaggN
                 # columns that the final projection drops — the filter must
                 # run while they still exist (i.e. before the projection)
@@ -1060,27 +1064,40 @@ class SqlApp:
 
     # ------------------------------------------------------------------
     def _compile_count_pattern(self, src: P.PatternSource, q: P.Query) -> DataFrame:
-        """`PATTERN (e1=S[f]{m,n}) WITHIN d` (reference
+        """`PATTERN (e1=S[f]{m,n}) WITHIN d` on both paths (reference
         PatternExpression::Count, converter.rs:1608-1645 +
         count_pre_state_processor.rs; collection aggregators
         collection_aggregation_executor.rs:1-30).
 
-        Relational form: the match set is the trailing-d frame of
-        qualifying events per key — one window pass, no join. A row fires
-        when its frame count lands in [m, n]; ``match_count`` is exposed as
-        a column, and aggregate calls over the element alias in SELECT /
-        HAVING (``sum(e1.price)``…) are rewritten to window aggregates over
-        the SAME frame, so they aggregate the matched set, not the output
-        rows."""
-        from pyspark.sql import Window as SW
-
+        The match set is the trailing-d frame of qualifying events per key,
+        i.e. ``WINDOW('time', d)``: batch runs it as the range frame of
+        ``operators.windows.time_sliding``, a live stream as the keyed frame
+        buffer of ``streaming.windows.sliding_stream(mode='time')``. A row
+        fires when its frame count ``match_count`` lands in [m, n].
+        Aggregate calls over the element alias in SELECT / HAVING
+        (``sum(e1.price)``…) become hidden ``_collaggN`` columns over the
+        SAME frame, so they aggregate the matched set, not the output rows;
+        they are computed before the bounds filter (the filter selects which
+        events fire, not what they see)."""
         el = src.steps[0]
         if src.within_seconds is None:
             raise ValueError(
                 "count quantifier needs WITHIN — it bounds the match set "
                 "(and the state horizon in streaming)"
             )
-        within = float(src.within_seconds)
+        within = int(src.within_seconds)
+        key = q.partition_key
+        live = self._pattern_streams_live(src)
+        if live and not key:
+            raise ValueError(
+                "count quantifier over a live stream needs PARTITION WITH "
+                "(the trailing-count state is per key)"
+            )
+        if live and self.streams[el.stream].ts_col is None:
+            raise ValueError(
+                "live-stream count quantifier needs the stream registered "
+                "with ts_col (event time drives the trailing window)"
+            )
         base, order_col = self._input(P.StreamRef(name=el.stream))
         if el.filter:
             base = base.filter(F.expr(rewrite_expr(el.filter)))
@@ -1088,38 +1105,47 @@ class SqlApp:
             *[F.col(c).alias(f"{el.alias}_{c}") for c in base.columns]
         )
         ts_col = f"{el.alias}_{order_col}"
-        part = (
-            [F.col(f"{el.alias}_{q.partition_key}")] if q.partition_key else []
-        )
-        w = (
-            SW.partitionBy(*part)
-            .orderBy(epoch_seconds(ts_col))  # epoch seconds (NTZ-safe)
-            .rangeBetween(-int(within), 0)
-        )
-        out = renamed.withColumn("match_count", F.count(F.lit(1)).over(w))
+        key_col = f"{el.alias}_{key}" if key else None
 
-        # collection aggregates: computed over the frame BEFORE the bounds
-        # filter (the filter selects which events fire, not what they see)
-        agg_idx = 0
-        texts: list = list(q.select)
-        for it in texts:
-            for call in extract_agg_calls(it.expr):
-                name = f"_collagg{agg_idx}"
-                agg_idx += 1
-                qualified = re.sub(rf"\b{el.alias}\.", f"{el.alias}_", call)
-                out = out.withColumn(
-                    name, F.expr(rewrite_expr(qualified)).over(w)
-                )
-                it.expr = it.expr.replace(call, name)
+        calls: list[tuple[str, str]] = []  # (hidden name, call text)
+
+        def hide(text: str) -> str:
+            for call in extract_agg_calls(text):
+                name = f"_collagg{len(calls)}"
+                calls.append((name, call))
+                text = text.replace(call, name)
+            return text
+
+        for it in q.select:
+            it.expr = hide(it.expr)
         if q.having:
-            for call in extract_agg_calls(q.having):
-                name = f"_collagg{agg_idx}"
-                agg_idx += 1
-                qualified = re.sub(rf"\b{el.alias}\.", f"{el.alias}_", call)
-                out = out.withColumn(
-                    name, F.expr(rewrite_expr(qualified)).over(w)
+            q.having = hide(q.having)
+
+        if live:
+            from engine_spark.streaming import windows as SWIN
+
+            specs = [("count", None, "match_count")]
+            for name, call in calls:
+                fn, col, _ = _simple_agg_spec(
+                    re.sub(rf"\b{el.alias}\.", "", call), name
                 )
-                q.having = q.having.replace(call, name)
+                specs.append((fn, f"{el.alias}_{col}" if col else None, name))
+            out = SWIN.sliding_stream(
+                renamed, ts_col, key_col, specs, mode="time", size=within
+            )
+        else:
+            aggs = {"match_count": F.count(F.lit(1))}
+            for name, call in calls:
+                qualified = re.sub(rf"\b{el.alias}\.", f"{el.alias}_", call)
+                aggs[name] = F.expr(rewrite_expr(qualified))
+            out = W.time_sliding(
+                renamed,
+                ts_col,
+                within,
+                [key_col] if key_col else None,
+                aggs=aggs,
+                allow_global=key_col is None,
+            )
 
         cond = F.col("match_count") >= el.min_count
         if el.max_count is not None:
@@ -1130,14 +1156,16 @@ class SqlApp:
     def _compile_group_streaming(
         self, src: P.PatternSource, partition_key: str | None
     ) -> DataFrame:
-        """Single AND/OR group over a LIVE stream.
+        """Single AND/OR group over a LIVE stream: ``_compile_pattern``'s
+        relational first-step group, run on the streaming DataFrame.
 
-        OR is stateless (disjunctive filter + null-padded union — the exact
-        relational formulation works on a streaming DataFrame), so it
-        reuses ``_compile_pattern``. AND routes to the keyed-state pair
-        buffer (nfa.logical_and_stream_payload) with the relational
-        first-step group's ``{alias}_{col}`` + ``_match_ts`` naming."""
-        from engine_spark.streaming import nfa as NFA
+        OR is stateless (disjunctive filter + null-padded union). AND is the
+        keyed pair join bounded by WITHIN as an event-time range, which
+        Spark runs as a stream-stream join (StreamingSymmetricHashJoin)
+        whose state the watermark evicts. The element stream gets the same
+        zero-lateness watermark every live kernel uses; its cast of an NTZ
+        event time to TIMESTAMP is undone on the output."""
+        from engine_spark.streaming.eventtime import watermarked
 
         g = src.steps[0]
         if not src.every:
@@ -1148,7 +1176,6 @@ class SqlApp:
             )
         if g.op == "or":
             return self._compile_pattern(src, partition_key)
-        # AND: keyed pair-buffer state
         if src.within_seconds is None:
             raise ValueError(
                 "AND group over a live stream requires WITHIN — it is the "
@@ -1171,96 +1198,30 @@ class SqlApp:
                     "supported over live streams"
                 )
         stream = self.streams[g.first.stream]
-        base, ts_col = stream.df, stream.ts_col
+        ts_col = stream.ts_col
         if ts_col is None:
             raise ValueError(
                 "live-stream AND group needs the stream registered with "
                 "ts_col"
             )
-        first = (
-            F.expr(rewrite_expr(g.first.filter)) if g.first.filter else F.lit(True)
+        self.streams[g.first.stream] = _Stream(
+            df=watermarked(stream.df, ts_col, "0 seconds"), ts_col=ts_col
         )
-        second = (
-            F.expr(rewrite_expr(g.second.filter))
-            if g.second.filter
-            else F.lit(True)
+        try:
+            out = self._compile_pattern(src, partition_key)
+        finally:
+            self.streams[g.first.stream] = stream
+        ts_type = stream.df.schema[ts_col].dataType
+        return out.withColumns(
+            {
+                c: F.col(c).cast(ts_type)
+                for c in (
+                    f"{g.first.alias}_{ts_col}",
+                    f"{g.second.alias}_{ts_col}",
+                    "_match_ts",
+                )
+            }
         )
-        payload = [c for c in base.columns if c != ts_col]
-        return NFA.logical_and_stream_payload(
-            base,
-            ts_col,
-            partition_key,
-            first,
-            second,
-            int(src.within_seconds),
-            aliases=(g.first.alias, g.second.alias),
-            payload_cols=[c for c in payload if c != partition_key],
-        )
-
-    # ------------------------------------------------------------------
-    def _compile_count_pattern_streaming(
-        self, src: P.PatternSource, q: P.Query
-    ) -> DataFrame:
-        """`PATTERN (e1=S[f]{m,n}) WITHIN d` over a LIVE stream — routes to
-        the per-key streaming NFA (nfa.count_quantifier_stream: trailing-d
-        timestamp buffer in keyed state, the exact streaming execution of
-        the relational range frame). Output columns get the same
-        ``{alias}_{col}`` names the relational path produces, so SELECT
-        rewriting is shared."""
-        from engine_spark.streaming import nfa as NFA
-
-        el = src.steps[0]
-        if src.within_seconds is None:
-            raise ValueError(
-                "count quantifier needs WITHIN — it bounds the match set "
-                "(and the state horizon in streaming)"
-            )
-        if not q.partition_key:
-            raise ValueError(
-                "count quantifier over a live stream needs PARTITION WITH "
-                "(the trailing-count state is per key)"
-            )
-        # collection aggregates over the MATCHED SET (the trailing buffer,
-        # reference collection_aggregation_executor.rs): rewrite each call
-        # to a hidden column the keyed-state op computes per firing event —
-        # mirrors the relational path's window-frame rewrite
-        specs: list[tuple[str, str | None, str]] = []
-        for it in list(q.select):
-            for call in extract_agg_calls(it.expr):
-                name = f"_collagg{len(specs)}"
-                qualified = re.sub(rf"\b{el.alias}\.", "", call)
-                specs.append(_simple_agg_spec(qualified, name))
-                it.expr = it.expr.replace(call, name)
-        if q.having:
-            for call in extract_agg_calls(q.having):
-                name = f"_collagg{len(specs)}"
-                qualified = re.sub(rf"\b{el.alias}\.", "", call)
-                specs.append(_simple_agg_spec(qualified, name))
-                q.having = q.having.replace(call, name)
-        stream = self.streams[el.stream]
-        base, ts_col = stream.df, stream.ts_col
-        if ts_col is None:
-            raise ValueError(
-                "live-stream count quantifier needs the stream registered "
-                "with ts_col (event time drives the trailing window)"
-            )
-        event_filter = (
-            F.expr(rewrite_expr(el.filter)) if el.filter else F.lit(True)
-        )
-        payload = [c for c in base.columns if c not in (q.partition_key, ts_col)]
-        out = NFA.count_quantifier_stream(
-            base,
-            ts_col,
-            q.partition_key,
-            event_filter,
-            min_count=el.min_count,
-            within_seconds=int(src.within_seconds),
-            max_count=el.max_count,
-            payload_cols=payload,
-            collect_aggs=specs or None,
-        )
-        renames = {c: f"{el.alias}_{c}" for c in (q.partition_key, ts_col, *payload)}
-        return out.withColumnsRenamed(renames)
 
     # ------------------------------------------------------------------
     def _pattern_element_streams(self, src: P.PatternSource) -> list[str]:
@@ -1315,8 +1276,8 @@ class SqlApp:
                 raise ValueError(
                     "an AND/OR group as the FIRST step of a live-stream "
                     "chain is not supported (an unanchored group's pair "
-                    "multiplicity needs the single-group operator); put a "
-                    "plain element first"
+                    "multiplicity needs the standalone group's pair join); "
+                    "put a plain element first"
                 )
             # mid-chain groups ride chain_stream's group steps below
         steps_eff = list(src.steps)
@@ -1558,12 +1519,7 @@ class SqlApp:
                         == F.col(f"{first.second.alias}_{partition_key}")
                     )
                 if within is not None:
-                    conds.append(
-                        F.abs(
-                            epoch_seconds_d(a_ts) - epoch_seconds_d(b_ts)
-                        )
-                        <= float(within)
-                    )
+                    conds.append(_pair_within(a_ts, b_ts, within))
                 if not conds and not self.allow_unbounded_groups:
                     raise ValueError(
                         "AND group without PARTITION key or WITHIN is an "
@@ -1621,8 +1577,8 @@ class SqlApp:
         # cur.columns through every hop (and _hop_group/_anti_between) and
         # is dropped before returning; fire-once ranks by key only, so it
         # still keeps one match per key. Streaming DataFrames reach this
-        # path only for single-step OR groups (no hops → no rank → no id
-        # needed), and monotonically_increasing_id is unsupported there.
+        # path only for single-step AND/OR groups (no hops → no rank → no
+        # id needed), and monotonically_increasing_id is unsupported there.
         if not cur.isStreaming:
             cur = cur.withColumn("_pm_uid", F.monotonically_increasing_id())
 
@@ -1844,10 +1800,7 @@ class SqlApp:
                     == F.col(f"{el2.alias}_{partition_key}")
                 )
             if within is not None:
-                conds.append(
-                    F.abs(epoch_seconds_d(a_ts) - epoch_seconds_d(b_ts))
-                    <= float(within)
-                )
+                conds.append(_pair_within(a_ts, b_ts, within))
             if not conds and not self.allow_unbounded_groups:
                 raise ValueError(
                     "AND group without PARTITION key or WITHIN is an "

@@ -8,11 +8,10 @@ reference engine on Spark's micro-batch runtime.
   ``sliding_stream``).
 - ``nfa``      — per-key pattern NFA over ``applyInPandasWithState``
   (reference stream_pre_state_processor.rs / state machine ~6k LoC).
-  ``chain_stream`` runs every followed-by and absent shape;
-  ``count_quantifier_stream`` stays separate because it fires per event on
-  a trailing ``[m, n]`` count and ``chain_stream`` rejects a quantified
-  step 0; ``logical_and_stream_payload`` stays separate because
-  ``chain_stream`` rejects a grouped step 0.
+  ``chain_stream`` is the one pattern kernel: it runs every followed-by
+  and absent shape. A lone count quantifier runs on ``sliding_stream``'s
+  time frame, and a first-step AND group as SqlApp's pair join (a native
+  stream-stream join).
 
 Batch vs streaming: every operator in engine_spark.operators has declared-
 equivalent batch semantics (verified by the DuckDB oracles); these modules

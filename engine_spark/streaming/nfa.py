@@ -19,15 +19,15 @@ Scale: state is per key-group in the state store (RocksDB on a real
 cluster), partitioned by the grouping key — the same shuffle a streaming
 aggregation pays. No global state, no driver involvement.
 
-One kernel per semantics — these are the kernels ``SqlApp`` compiles a
-live-stream PATTERN to:
+One pattern kernel — ``chain_stream`` is what ``SqlApp`` compiles every
+live-stream followed-by shape to: 1..N steps, mid-chain AND/OR groups and
+count quantifiers, a trailing ``NOT C FOR d``. The two shapes it rejects
+run on code that exists for other semantics:
 
-- ``chain_stream``: every followed-by shape (1..N steps, mid-chain AND/OR
-  groups and count quantifiers, a trailing ``NOT C FOR d``);
-- ``count_quantifier_stream``: a lone ``A{m,n}``; it fires per event on a
-  trailing ``[m, n]`` count, and ``chain_stream`` rejects a quantified step 0;
-- ``logical_and_stream_payload``: a first-step ``A AND B``; ``chain_stream``
-  rejects a grouped step 0.
+- a lone ``A{m,n} WITHIN d`` is the trailing-d frame count, i.e.
+  ``WINDOW('time', d)`` — ``streaming.windows.sliding_stream(mode='time')``;
+- a first-step ``A AND B WITHIN d`` is ``SqlApp``'s relational pair join,
+  which Spark runs as a stream-stream join with watermark eviction.
 """
 
 from __future__ import annotations
@@ -184,15 +184,15 @@ def chain_stream(
     if step_mins[0] != 1:
         raise ValueError(
             "step 0 cannot carry a count quantifier (a quantified anchor "
-            "needs the single-step count operator)"
+            "is a standalone A{m,n}, which runs on the time-window kernel)"
         )
     group_steps = dict(group_steps or {})
     group_ops = {i: op for i, (_, _, op) in group_steps.items()}
     if 0 in group_steps:
         raise ValueError(
             "step 0 cannot be a group in a multi-step chain (pair "
-            "multiplicity of an unanchored group needs the dedicated "
-            "single-group operator)"
+            "multiplicity of an unanchored group needs the standalone "
+            "group's pair join)"
         )
     for i in group_steps:
         if step_mins[i] != 1:
@@ -528,307 +528,3 @@ def chain_stream(
     return tagged.groupBy(*group_cols).applyInPandasWithState(
         run, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
     )
-
-
-def count_quantifier_stream(
-    df: DataFrame,
-    ts_col: str,
-    key_col: str,
-    event_filter: Column,
-    min_count: int,
-    within_seconds: int,
-    value_col: str | None = None,
-    max_count: int | None = None,
-    late: str = "0 seconds",
-    payload_cols: list[str] | None = None,
-    collect_aggs: list[tuple[str, str | None, str]] | None = None,
-) -> DataFrame:
-    """Streaming `e1=A{m,}` / `A{m,n}` WITHIN d (reference
-    count_pre_state_processor.rs): an event fires when the trailing-d count
-    of qualifying events on its key is in ``[m, n]`` — the exact semantics
-    of the trailing range frame SqlApp's batch count path
-    (``SqlApp._compile_count_pattern``) computes, held as a per-key
-    timestamp buffer whose size the horizon bounds.
-
-    ``payload_cols`` carries arbitrary event columns through to the output
-    (types preserved from the input schema — what the SQL routing needs);
-    the legacy ``value_col`` form emits that one column as double.
-
-    ``collect_aggs`` = ``[(fn, col | None, alias), ...]`` with fn in
-    count/sum/avg/min/max: collection aggregates over the MATCHED SET
-    (the trailing-d buffer, reference collection_aggregation_executor.rs)
-    — the buffer then also holds the referenced columns' values.
-
-    Output: (key, ts, match_count, *payload, *collect_agg_aliases).
-    """
-    if payload_cols is None:
-        if value_col is None:
-            raise ValueError("pass payload_cols or value_col")
-        carry = [value_col]
-        carry_types = ["double"]
-    else:
-        carry = list(payload_cols)
-        schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-        carry_types = [schema[c] for c in carry]
-    within_us = within_seconds * US
-    filtered = watermarked(df.filter(event_filter), ts_col, late)
-    ktype = dict((f.name, f.dataType) for f in df.schema.fields)[key_col].simpleString()
-    tstype = df.schema[ts_col].dataType.simpleString()
-    collect_aggs = list(collect_aggs or [])
-    from engine_spark.streaming.windows import SIMPLE_AGG_FNS, _agg_over
-
-    for fn, _, _ in collect_aggs:
-        if fn not in SIMPLE_AGG_FNS:
-            raise ValueError(
-                f"collection aggregate {fn!r} not in {SIMPLE_AGG_FNS}"
-            )
-    agg_cols = sorted({c for _, c, _ in collect_aggs if c is not None})
-    out_schema = ", ".join(
-        [f"{key_col} {ktype}", f"{ts_col} {tstype}", "match_count long"]
-        + [f"{c} {t}" for c, t in zip(carry, carry_types)]
-        + [
-            f"{a} {'long' if fn == 'count' else 'double'}"
-            for fn, _, a in collect_aggs
-        ]
-    )
-    state_schema = ", ".join(
-        ["buf_ts array<long>"]
-        + [f"buf_{i} array<double>" for i in range(len(agg_cols))]
-    )
-    legacy = payload_cols is None
-
-    def _carry_value(v):
-        if legacy:
-            return float(v)
-        if isinstance(v, np.datetime64):
-            return pd.Timestamp(v)  # .item() on datetime64[ns] is raw int ns
-        if hasattr(v, "item"):  # numpy scalar → python
-            v = v.item()
-        return v
-
-    def run(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        buf: list[tuple] = []  # (ts, *agg_col_values)
-        if state.exists:
-            got = state.get
-            bts = got[0] or []
-            cols = [list(got[1 + i] or []) for i in range(len(agg_cols))]
-            buf = [
-                (t, *[cols[i][j] for i in range(len(agg_cols))])
-                for j, t in enumerate(bts)
-            ]
-        rows = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            ts_col, kind="mergesort"
-        )
-        out = []
-        ts_us = _ts_us_arr(rows[ts_col])
-        agg_a = {c: rows[c].values for c in agg_cols}
-        carry_a = {c: rows[c].values for c in carry}
-        for j in range(len(rows)):
-            t = int(ts_us[j])
-            buf = [b for b in buf if t - b[0] <= within_us]
-            buf.append(
-                (
-                    t,
-                    *[
-                        None
-                        if agg_a[c][j] is None or agg_a[c][j] != agg_a[c][j]
-                        else float(agg_a[c][j])
-                        for c in agg_cols
-                    ],
-                )
-            )
-            cnt = len(buf)
-            if cnt >= min_count and (max_count is None or cnt <= max_count):
-                agg_vals = [
-                    _agg_over(
-                        [b[1 + agg_cols.index(c)] for b in buf]
-                        if c
-                        else [1] * len(buf),
-                        fn,
-                    )
-                    for fn, c, _ in collect_aggs
-                ]
-                out.append(
-                    (
-                        key[0],
-                        pd.Timestamp(t * 1000),
-                        cnt,
-                        *[_carry_value(carry_a[c][j]) for c in carry],
-                        *agg_vals,
-                    )
-                )
-        if buf:
-            state.update(
-                (
-                    [b[0] for b in buf],
-                    *[[b[1 + i] for b in buf] for i in range(len(agg_cols))],
-                )
-            )
-            _set_timeout(
-                state, max(b[0] for b in buf) // 1000 + within_seconds * 1000
-            )
-        else:
-            state.remove()
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    key_col,
-                    ts_col,
-                    "match_count",
-                    *carry,
-                    *[a for _, _, a in collect_aggs],
-                ],
-            )
-
-    return filtered.groupBy(key_col).applyInPandasWithState(
-        run, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-    )
-
-
-def logical_and_stream_payload(
-    df: DataFrame,
-    ts_col: str,
-    key_col: str,
-    first: Column,
-    second: Column,
-    within_seconds: int,
-    aliases: tuple[str, str] = ("e1", "e2"),
-    payload_cols: list[str] | None = None,
-    late: str = "0 seconds",
-) -> DataFrame:
-    """`e1=A AND e2=B` over a live stream with FULL payload capture
-    (reference logical_pre_state_processor.rs AND mode): every (A, B) pair
-    on the key with ``|tA − tB| ≤ d`` fires at the later of the two — the
-    pair set of the AND-group join in SqlApp's batch chain
-    (``SqlApp._compile_pattern``).
-
-    Output: key + ``{a1}_{ts_col}``/``{a1}_{col}…`` + ``{a2}_…`` +
-    ``_match_ts`` — the same column names the relational first-step group
-    produces, so shared SELECT rewriting works. State = the in-horizon A/B
-    buffers per key with payloads as JSON (the chain_stream representation).
-    """
-    import json
-
-    from pyspark.sql import types as T
-
-    a1, a2 = aliases
-    within_us = within_seconds * US
-    schema = {f.name: f.dataType for f in df.schema.fields}
-    if payload_cols is None:
-        payload_cols = [c for c in df.columns if c not in (key_col, ts_col)]
-    ts_payload = {
-        c
-        for c in payload_cols
-        if isinstance(schema[c], (T.TimestampType, T.TimestampNTZType))
-    }
-    tagged = (
-        watermarked(df, ts_col, late)
-        .withColumn("_is_a", first.cast("boolean"))
-        .withColumn("_is_b", second.cast("boolean"))
-        .filter(F.col("_is_a") | F.col("_is_b"))
-    )
-    ktype = schema[key_col].simpleString()
-    tstype = schema[ts_col].simpleString()
-    out_parts = [f"{key_col} {ktype}"]
-    out_columns = [key_col]
-    for alias in (a1, a2):
-        out_parts.append(f"{alias}_{ts_col} {tstype}")
-        out_columns.append(f"{alias}_{ts_col}")
-        for c in payload_cols:
-            out_parts.append(f"{alias}_{c} {schema[c].simpleString()}")
-            out_columns.append(f"{alias}_{c}")
-    out_parts.append(f"_match_ts {tstype}")
-    out_columns.append("_match_ts")
-    out_schema = ", ".join(out_parts)
-    state_schema = "a_ts array<long>, a_pay array<string>, b_ts array<long>, b_pay array<string>"
-
-    def capture(rec: dict) -> str:
-        cap = {}
-        for c in payload_cols:
-            v = rec[c]
-            if hasattr(v, "item"):
-                v = v.item()
-            if c in ts_payload and v is not None:
-                v = pd.Timestamp(v).isoformat()
-            cap[c] = None if v is None or (isinstance(v, float) and v != v) else v
-        return json.dumps(cap)
-
-    def revive(pay: str, c: str):
-        v = json.loads(pay).get(c)
-        if c in ts_payload and v is not None:
-            return pd.Timestamp(v)
-        return v
-
-    def run(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        a_buf: list[tuple[int, str]] = []
-        b_buf: list[tuple[int, str]] = []
-        if state.exists:
-            ats, aps, bts, bps = state.get
-            a_buf = list(zip(ats or [], aps or []))
-            b_buf = list(zip(bts or [], bps or []))
-        rows = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            ts_col, kind="mergesort"
-        )
-        out = []
-
-        def emit(ta: int, pa: str, tb: int, pb: str) -> None:
-            out.append(
-                (
-                    key[0],
-                    pd.Timestamp(ta * 1000),
-                    *[revive(pa, c) for c in payload_cols],
-                    pd.Timestamp(tb * 1000),
-                    *[revive(pb, c) for c in payload_cols],
-                    pd.Timestamp(max(ta, tb) * 1000),
-                )
-            )
-
-        for r in rows.to_dict("records"):
-            t = _us(r[ts_col])
-            pay = capture(r)
-            ia, ib = bool(r["_is_a"]), bool(r["_is_b"])
-            if ia:
-                for tb, pb in b_buf:
-                    if abs(t - tb) <= within_us:
-                        emit(t, pay, tb, pb)
-            if ib:
-                for ta, pa in a_buf:
-                    if abs(t - ta) <= within_us:
-                        emit(ta, pa, t, pay)
-            if ia and ib:
-                emit(t, pay, t, pay)
-            if ia:
-                a_buf.append((t, pay))
-            if ib:
-                b_buf.append((t, pay))
-        if len(rows):
-            now = _us(rows[ts_col].iloc[-1])
-            a_buf = [(ta, pa) for ta, pa in a_buf if now - ta <= within_us]
-            b_buf = [(tb, pb) for tb, pb in b_buf if now - tb <= within_us]
-        if a_buf or b_buf:
-            state.update(
-                (
-                    [t for t, _ in a_buf],
-                    [p for _, p in a_buf],
-                    [t for t, _ in b_buf],
-                    [p for _, p in b_buf],
-                )
-            )
-            newest = max([t for t, _ in a_buf] + [t for t, _ in b_buf])
-            _set_timeout(state, newest // 1000 + within_seconds * 1000)
-        else:
-            state.remove()
-        if out:
-            yield pd.DataFrame(out, columns=out_columns)
-
-    return tagged.groupBy(key_col).applyInPandasWithState(
-        run, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-    )
-

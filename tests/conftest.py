@@ -77,6 +77,14 @@ def run_pattern(df, query, key="user"):
     )["Out"]
 
 
+def run_live_pattern(sdf, query, key="user"):
+    """The live twin of ``run_pattern``: the same app text over a streaming
+    ``sdf`` (e.g. ``StreamRunner.stream()``), so SqlApp compiles it to the
+    live kernels; returns the streaming ``Out`` frame."""
+    assert sdf.isStreaming, "run_live_pattern needs a streaming DataFrame"
+    return run_pattern(sdf, query, key)
+
+
 def absent_chain(
     df, ts_col, key_col, first, absent, within_seconds, value_col, salt=None
 ):

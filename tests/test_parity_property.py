@@ -36,7 +36,12 @@ from pyspark.sql import functions as F
 from engine_spark.plans import SqlApp
 from engine_spark.streaming import nfa
 from engine_spark.streaming.harness import StreamRunner
-from tests.conftest import absent_chain, followed_by_chain, run_pattern
+from tests.conftest import (
+    absent_chain,
+    followed_by_chain,
+    run_live_pattern,
+    run_pattern,
+)
 
 T0 = datetime(2026, 1, 1, 12, 0)
 
@@ -319,12 +324,12 @@ def test_count_quantifier_batch_equals_streaming(spark, events, split):
         ],
         key=lambda r: r[0],
     )
-    batch = _batch_pattern(
-        spark,
-        rows,
+    query = (
         "SELECT user, e1.ts AS ts, match_count, e1.v AS v "
-        f"FROM PATTERN (e1=S{{2,4}}) WITHIN {within} SECONDS",
-        schema="ts timestamp, user string, v double",
+        f"FROM PATTERN (e1=S{{2,4}}) WITHIN {within} SECONDS"
+    )
+    batch = _batch_pattern(
+        spark, rows, query, schema="ts timestamp, user string, v double"
     )
     batch_set = {
         (r["user"], str(r["ts"]), r["match_count"], r["v"]) for r in batch
@@ -339,14 +344,7 @@ def test_count_quantifier_batch_equals_streaming(spark, events, split):
                 for ts, u, v in rows[i : i + n]
             ]
         )
-    r.run(
-        lambda sdf: nfa.count_quantifier_stream(
-            sdf, "ts", "user",
-            event_filter=F.lit(True),
-            min_count=2, max_count=4,
-            within_seconds=within, value_col="v",
-        )
-    )
+    r.run(lambda sdf: run_live_pattern(sdf, query))
     stream_set = {
         (m["user"], str(m["ts"]), m["match_count"], m["v"]) for m in r.shutdown()
     }
@@ -808,16 +806,22 @@ def test_chain3_ties_batch_equals_streaming(spark, events, split):
     ),
     split=st.integers(min_value=1, max_value=3),
     connective=st.sampled_from(["AND", "OR"]),
+    shape=st.sampled_from(["mid-chain", "standalone"]),
 )
 @settings(
     max_examples=10,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-def test_group_ties_batch_equals_streaming(spark, events, split, connective):
-    """`A -> (B AND C)` and `A -> (B OR C)` on tie-heavy schedules. For OR
-    the firing member is engine-specific on a tie, so the projection takes
-    coalesce(e2.v, e3.v) — member-agnostic, well-defined either way."""
+def test_group_ties_batch_equals_streaming(
+    spark, events, split, connective, shape
+):
+    """`A -> (B AND C)` and `A -> (B OR C)` mid-chain, and the standalone
+    `(B AND C)` / `(B OR C)` group, on tie-heavy schedules. For OR the
+    firing member is engine-specific on a tie, so the projection takes
+    coalesce(e2.v, e3.v) — member-agnostic, well-defined either way. The
+    standalone C member also takes B events, so one event can fill both
+    members."""
     from engine_spark.plans.compiler import _Stream
 
     within = 300
@@ -832,11 +836,21 @@ def test_group_ties_batch_equals_streaming(spark, events, split, connective):
         "e2.v AS b, e3.v AS c" if connective == "AND"
         else "coalesce(e2.v, e3.v) AS bc"
     )
+    if shape == "mid-chain":
+        select = f"e1.v AS a, {proj}"
+        pattern = (
+            f"e1=E[etype = 'a'] -> "
+            f"(e2=E[etype = 'b'] {connective} e3=E[etype = 'c'])"
+        )
+    else:
+        select = proj
+        pattern = (
+            f"e2=E[etype = 'b'] {connective} e3=E[etype IN ('b','c')]"
+        )
     sql = (
         "PARTITION WITH (user OF E) BEGIN "
-        f"INSERT INTO Out SELECT e1.v AS a, {proj} "
-        f"FROM EVERY PATTERN (e1=E[etype = 'a'] -> "
-        f"(e2=E[etype = 'b'] {connective} e3=E[etype = 'c'])) "
+        f"INSERT INTO Out SELECT {select} "
+        f"FROM EVERY PATTERN ({pattern}) "
         f"WITHIN {within} SECONDS; END;"
     )
     schema = "ts timestamp, user string, etype string, v double"
@@ -860,7 +874,9 @@ def test_group_ties_batch_equals_streaming(spark, events, split, connective):
         return app2.sql(sql)["Out"]
 
     r.run(build)
-    cols = ("a", "b", "c") if connective == "AND" else ("a", "bc")
+    cols = ("b", "c") if connective == "AND" else ("bc",)
+    if shape == "mid-chain":
+        cols = ("a", *cols)
     stream_set = sorted(tuple(m[c] for c in cols) for m in r.shutdown())
     assert stream_set == batch_set
 

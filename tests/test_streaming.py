@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from engine_spark.streaming.harness import StreamRunner
 from engine_spark.streaming import nfa, windows as SW
-from tests.conftest import absent_chain, followed_by_chain
+from tests.conftest import absent_chain, followed_by_chain, run_live_pattern
 
 
 def _ts(minute: int, second: int = 0) -> str:
@@ -373,11 +373,10 @@ def test_count_quantifier_stream_bounded(spark):
         {"ts": _ts(0, 40), "user": "u1", "v": 5.0},  # count=5 → silent
     ])
     r.run(
-        lambda df: nfa.count_quantifier_stream(
-            df, "ts", "user",
-            event_filter=F.lit(True),
-            min_count=2, max_count=4,
-            within_seconds=600, value_col="v",
+        lambda df: run_live_pattern(
+            df,
+            "SELECT match_count, e1.v AS v "
+            "FROM PATTERN (e1=S{2,4}) WITHIN 600 SECONDS",
         )
     )
     out = r.shutdown()
@@ -393,17 +392,48 @@ def test_logical_and_stream_pairs_both_orders(spark):
     r.send([{"ts": _ts(2), "user": "u1", "etype": "a", "v": 1.0}])
     r.send([{"ts": _ts(3), "user": "u1", "etype": "b", "v": 20.0}])
     r.run(
-        lambda df: nfa.logical_and_stream_payload(
-            df, "ts", "user",
-            first=F.col("etype") == "a",
-            second=F.col("etype") == "b",
-            within_seconds=600, payload_cols=["v"],
-        ).select(
-            F.col("e1_v").alias("e1_value"), F.col("e2_v").alias("e2_value")
+        lambda df: run_live_pattern(
+            df,
+            "SELECT e1.v AS e1_value, e2.v AS e2_value FROM EVERY PATTERN "
+            "(e1=S[etype = 'a'] AND e2=S[etype = 'b']) WITHIN 600 SECONDS",
         )
     )
     got = sorted((m["e1_value"], m["e2_value"]) for m in r.shutdown())
     assert got == [(1.0, 10.0), (1.0, 20.0)]
+
+
+def test_logical_and_stream_is_evicting_stream_join(spark, capsys):
+    """A live AND group runs as Spark's stream-stream join, not a Python
+    state function, and the WITHIN range lets the watermark evict its
+    state: once the watermark passes 12:00 + 10 min, the no-data batch
+    that follows drops the first pair's two buffered rows."""
+    r = StreamRunner(spark, "ts timestamp, user string, etype string, v double")
+    r.send([
+        {"ts": _ts(0), "user": "u1", "etype": "a", "v": 1.0},
+        {"ts": _ts(1), "user": "u1", "etype": "b", "v": 2.0},
+    ])
+    r.send([{"ts": _ts(30), "user": "u1", "etype": "a", "v": 3.0}])
+    out = run_live_pattern(
+        r.stream(),
+        "SELECT e1.v AS e1_value, e2.v AS e2_value FROM EVERY PATTERN "
+        "(e1=S[etype = 'a'] AND e2=S[etype = 'b']) WITHIN 600 SECONDS",
+    )
+    got = []
+    q = (
+        out.writeStream.foreachBatch(lambda d, _: got.extend(d.collect()))
+        .option("checkpointLocation", r.checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    q.explain(extended=True)
+    plan = capsys.readouterr().out
+    removed = q.lastProgress["stateOperators"][0]["numRowsRemoved"]
+    r.shutdown()
+    assert "StreamingSymmetricHashJoin" in plan
+    assert "FlatMapGroupsInPandasWithState" not in plan
+    assert removed > 0
+    assert [(m["e1_value"], m["e2_value"]) for m in got] == [(1.0, 2.0)]
 
 
 def test_logical_or_stream_is_stateless_filter(spark):
@@ -703,9 +733,10 @@ def test_chain_stream_absent_final_after_two_steps(spark):
 
 
 def test_sql_count_quantifier_on_live_stream(spark):
-    """SQL `{m,n}` count quantifier over a LIVE stream routes through
-    nfa.count_quantifier_stream with the relational path's alias_column
-    naming — the trailing count crosses micro-batch boundaries."""
+    """SQL `{m,n}` count quantifier over a LIVE stream runs on the
+    time-window kernel (streaming.windows.sliding_stream) with the
+    relational path's alias_column naming — the trailing count crosses
+    micro-batch boundaries."""
     from engine_spark.plans import SqlApp
     from engine_spark.plans.compiler import _Stream
 

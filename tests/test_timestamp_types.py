@@ -22,7 +22,7 @@ from engine_spark.functions.timeutils import (
 )
 from engine_spark.operators import windows
 
-from tests.conftest import rows, run_pattern, ts
+from tests.conftest import rows, run_live_pattern, run_pattern, ts
 
 TS_TYPES = ("timestamp", "timestamp_ntz")
 
@@ -196,16 +196,40 @@ def test_count_quantifier_both_types(spark, ts_type):
     assert got == [(1, 2)]
 
 
-@pytest.mark.parametrize("ts_type", TS_TYPES)
-def test_count_quantifier_stream_accepts_both_ts_types(spark, ts_type):
-    """count_quantifier_stream was the one stateful op still calling
-    withWatermark directly — an NTZ event-time stream crashed with
-    EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE instead of routing through the
-    watermarked() shim like its siblings. Pin both types end-to-end and
-    the output ts type round-trip."""
-    from engine_spark.streaming import nfa
+#: live pattern shapes off ``chain_stream``: (query, compared columns,
+#: expected rows, event-time output columns)
+LIVE_TS_SHAPES = {
+    "count": (
+        "SELECT match_count, e1.v AS v, e1.ts AS ts "
+        "FROM PATTERN (e1=S{2,4}) WITHIN 600 SECONDS",
+        ("match_count", "v"),
+        [(2, 2.0), (3, 3.0)],
+        ("ts",),
+    ),
+    "and": (
+        "SELECT e1.v AS e1_v, e2.v AS e2_v, e1.ts AS ts, "
+        "_match_ts AS matched_at FROM EVERY PATTERN "
+        "(e1=S[v = 1.0] AND e2=S[v > 1.0]) WITHIN 600 SECONDS",
+        ("e1_v", "e2_v"),
+        [(1.0, 2.0), (1.0, 3.0)],
+        ("ts", "matched_at"),
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    "ts_type, shape",
+    [pytest.param(t, "count", id=t) for t in TS_TYPES]
+    + [pytest.param(t, "and", id=f"{t}-and") for t in TS_TYPES],
+)
+def test_count_quantifier_stream_accepts_both_ts_types(spark, ts_type, shape):
+    """The live count quantifier (time-window kernel) and the live AND
+    group (stream-stream join) watermark an NTZ event-time stream through
+    the watermarked() shim, which casts it to TIMESTAMP. Pin both types
+    end-to-end and the output event-time type round-trip."""
     from engine_spark.streaming.harness import StreamRunner
 
+    query, cols, expected, ts_cols = LIVE_TS_SHAPES[shape]
     r = StreamRunner(spark, f"ts {ts_type}, user string, v double")
     r.send([
         {"ts": "2026-01-01T12:00:00", "user": "u1", "v": 1.0},
@@ -217,19 +241,19 @@ def test_count_quantifier_stream_accepts_both_ts_types(spark, ts_type):
 
     def build(sdf):
         assert sdf.schema["ts"].dataType.simpleString() == ts_type
-        out = nfa.count_quantifier_stream(
-            sdf, "ts", "user",
-            event_filter=F.lit(True),
-            min_count=2, max_count=4,
-            within_seconds=600, value_col="v",
+        out = run_live_pattern(sdf, query)
+        out_types.update(
+            {c: out.schema[c].dataType.simpleString() for c in ts_cols}
         )
-        out_types["ts"] = out.schema["ts"].dataType.simpleString()
         return out
 
     r.run(build)
     out = r.shutdown()
-    assert out_types["ts"] == ts_type
-    assert [(m["match_count"], m["v"]) for m in out] == [(2, 2.0), (3, 3.0)]
+    assert out_types == {c: ts_type for c in ts_cols}
+    got = [tuple(m[c] for c in cols) for m in out]
+    if shape == "and":  # join output order is unspecified
+        got.sort()
+    assert got == expected
 
 
 @pytest.mark.parametrize("ts_type", TS_TYPES)
